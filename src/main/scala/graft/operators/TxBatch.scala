@@ -62,7 +62,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * always refuse translation.
   *
   * Connector PLANNING is fold-tolerant
-  * ([[graft.sources.CellsSource.foldTolerant]]): a fold sweeping a
+  * ([[graft.sources.LayoutSource.foldTolerant]]): a fold sweeping a
   * commit unit between a scan's root listing and its per-unit listing
   * retries against a fresh listing (surfacing the translation refusal
   * where one applies) instead of crashing on the TOCTOU. The residual

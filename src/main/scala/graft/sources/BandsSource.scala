@@ -1,29 +1,16 @@
 package graft.sources
 
-import java.util
-import java.util.OptionalLong
-
-import scala.jdk.CollectionConverters._
-
 import graft.operators.BandIndex
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.sources.{EqualTo, Filter, In}
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-/** DataSource V2 connector for the [[BandIndex]] LSH band layout —
-  * the band-index twin of [[PostingsSource]]: a `bucket` (or
-  * `band_hash`, from which the bucket follows by the layout's own
-  * `pmod`) predicate against this source is pushed INTO the scan and
-  * prunes unprobed bucket directories at file-listing time, so the
-  * near-dup probe's "only the batch's buckets are listed" contract is
-  * visible on the scan node itself instead of living in a path helper.
+/** DataSource V2 connector for the [[BandIndex]] LSH band layout: a
+  * `bucket` (or `band_hash`, from which the bucket follows by the
+  * layout's own `pmod`) predicate against this source is pushed INTO
+  * the scan and prunes unprobed bucket directories at file-listing
+  * time, so the near-dup probe's "only the batch's buckets are listed"
+  * contract is visible on the scan node itself.
   *
   * Usage:
   * {{{
@@ -35,44 +22,12 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * Geometry (`nBuckets`, needed to derive buckets from band hashes) is
   * read from the layout's own `_graft_meta.json` — the stamp
   * [[BandIndex.writeBandLayout]] publishes — so a reader can never
-  * probe with mismatched geometry.
-  *
-  * Supported pushdown: EqualTo/In on `bucket` and on `band_hash`
-  * (each hash maps to its bucket; the hash set is ALSO re-checked by
-  * the reader, so the pushed filters are accepted, not advisory).
-  * Conjunctive value sets INTERSECT (see PostingsScanBuilder). The
-  * scan reports statistics over the PRUNED listing
-  * ([[SupportsReportStatistics]]), so a narrow probe is
-  * broadcast-eligible without a manual `broadcast()` hint.
-  */
-class BandsSource extends TableProvider {
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    BandsSource.Schema
+  * probe with mismatched geometry. This file holds only the band
+  * layout's definition ([[BandsLayout]]); the scan, stream and write
+  * path are the shared [[LayoutSource]] stack. */
+class BandsSource extends LayoutSource(BandsSource)
 
-  override def getTable(schema: StructType,
-      partitioning: Array[Transform],
-      properties: util.Map[String, String]): Table = {
-    val path = properties.get("path")
-    require(path != null && path.nonEmpty,
-      "graft.sources.BandsSource needs option 'path'")
-    // geometry comes from the layout's OWN meta stamp — a geometry-less
-    // path fails fast here, and caller-passed tau/nBuckets options (the
-    // append-side declaration of what the caller THINKS it is writing
-    // into) must match the stamp, the BandIndex.requireGeometry rule
-    val (tau, nBuckets) = BandIndex.readMeta(SparkSession.active, path)
-    def opt(names: String*): Option[String] =
-      names.flatMap(n => Option(properties.get(n))).headOption
-    opt("nbuckets", "nBuckets").foreach(nb => require(nb.toInt == nBuckets,
-      s"band-layout geometry mismatch at $path: layout has " +
-        s"nBuckets=$nBuckets, option asked for nBuckets=$nb"))
-    opt("tau").foreach(t => require(t.toDouble == tau,
-      s"band-layout geometry mismatch at $path: layout has tau=$tau, " +
-        s"option asked for tau=$t"))
-    new BandsTable(path, nBuckets, tau)
-  }
-}
-
-object BandsSource {
+object BandsSource extends LayoutFormat {
   /** Layout schema — `bucket` is the partition directory value. */
   val Schema: StructType = StructType(Seq(
     StructField("doc_id", LongType, nullable = false),
@@ -86,490 +41,59 @@ object BandsSource {
     val m = bandHash % nBuckets
     if (m < 0) m + nBuckets else m
   }
-}
 
-private[sources] class BandsTable(path: String, nBuckets: Int,
-    tau: Double)
-    extends Table with SupportsRead
-    with org.apache.spark.sql.connector.catalog.SupportsWrite {
-  override def name(): String = s"graft_bands($path)"
-  override def schema(): StructType = BandsSource.Schema
-  /** Operational TBLPROPERTIES — geometry stamp, base generation,
-    * live-batch fan-in (see [[LayoutProperties]]). */
-  override def properties(): util.Map[String, String] =
-    LayoutProperties.of(path, "bands",
-      Seq("tau" -> tau.toString, "nBuckets" -> nBuckets.toString))
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ,
-      TableCapability.BATCH_WRITE,
-      TableCapability.MICRO_BATCH_READ,
-      TableCapability.STREAMING_WRITE)
-  override def newScanBuilder(
-      options: CaseInsensitiveStringMap): ScanBuilder =
-    new BandsScanBuilder(path, nBuckets,
-      CellsSource.parseRoots(options.get("roots")))
-  override def newWriteBuilder(
-      info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
-      : org.apache.spark.sql.connector.write.WriteBuilder =
-    new BandsWriteBuilder(path, nBuckets, info.schema(),
-      new SerializableHadoopConf(
-        SparkSession.active.sparkContext.hadoopConfiguration))
-}
+  private[sources] def schemaAt(spark: SparkSession,
+      path: String): StructType = Schema
 
-private[graft] class BandsScanBuilder(path: String, nBuckets: Int,
-    roots: Option[Set[String]] = None)
-    extends ScanBuilder with SupportsPushDownFilters
-    with SupportsPushDownRequiredColumns {
-
-  private var pushed: Array[Filter] = Array.empty
-  /** None = no bucket/hash predicate pushed → scan every bucket. */
-  private var buckets: Option[Set[Long]] = None
-  private var hashes: Option[Set[Long]] = None
-  private var required: StructType = BandsSource.Schema
-
-  private def longValues(f: Filter, colName: String): Option[Seq[Long]] =
-    f match {
-      case EqualTo(`colName`, v: Long) => Some(Seq(v))
-      case EqualTo(`colName`, v: Int) => Some(Seq(v.toLong))
-      case In(`colName`, vs) if vs.forall(v =>
-        v.isInstanceOf[Long] || v.isInstanceOf[Int]) =>
-        Some(vs.toSeq.map {
-          case l: java.lang.Long => l.longValue
-          case i: java.lang.Integer => i.longValue
-        })
-      case _ => None
-    }
-
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    val (supported, residual) = filters.partition(f =>
-      longValues(f, "band_hash").isDefined ||
-        longValues(f, "bucket").isDefined)
-    pushed = supported
-    // conjunction semantics: each filter's value set INTERSECTS
-    val hashSets = supported.flatMap(longValues(_, "band_hash").map(_.toSet))
-    if (hashSets.nonEmpty) {
-      val hs = hashSets.reduce(_ intersect _)
-      hashes = Some(hs)
-      buckets = Some(hs.map(BandsSource.bucketOf(_, nBuckets)))
-    }
-    val bucketSets = supported.flatMap(longValues(_, "bucket").map(_.toSet))
-    if (bucketSets.nonEmpty) {
-      val bs = bucketSets.reduce(_ intersect _)
-      buckets = Some(buckets.fold(bs)(_ intersect bs))
-    }
-    residual
+  /** Geometry comes from the layout's OWN meta stamp — a geometry-less
+    * path fails fast here, and caller-passed tau/nBuckets options (the
+    * append-side declaration of what the caller THINKS it is writing
+    * into) must match the stamp, the BandIndex.requireGeometry rule. */
+  private[sources] def open(spark: SparkSession, path: String,
+      opt: String => Option[String], schema: StructType): Layout = {
+    val (tau, nBuckets) = BandIndex.readMeta(spark, path)
+    opt("nbuckets").orElse(opt("nBuckets")).foreach(nb =>
+      require(nb.toInt == nBuckets,
+        s"band-layout geometry mismatch at $path: layout has " +
+          s"nBuckets=$nBuckets, option asked for nBuckets=$nb"))
+    opt("tau").foreach(t => require(t.toDouble == tau,
+      s"band-layout geometry mismatch at $path: layout has tau=$tau, " +
+        s"option asked for tau=$t"))
+    BandsLayout(nBuckets, tau)
   }
-
-  override def pushedFilters(): Array[Filter] = pushed
-
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    required = requiredSchema
-
-  override def build(): Scan =
-    new BandsScan(path, nBuckets, required, buckets, hashes, pushed,
-      new SerializableHadoopConf(
-        SparkSession.active.sparkContext.hadoopConfiguration), roots)
 }
 
-private[graft] class BandsScan(path: String, nBuckets: Int,
-    required: StructType, buckets: Option[Set[Long]],
-    hashes: Option[Set[Long]], pushed: Array[Filter],
-    hconf: SerializableHadoopConf, roots: Option[Set[String]] = None)
-    extends Scan with Batch
-    with SupportsRuntimeFiltering with SupportsReportStatistics {
+/** The band layout: `bucket = pmod(band_hash, nBuckets)`. Per-row write
+  * enforcement: `doc_id` must be non-negative (the probe's sign-flip
+  * encoding reserves negatives for batch ids) and `bucket` must equal
+  * the layout hash of `band_hash`. */
+private[sources] case class BandsLayout(nBuckets: Int, tau: Double)
+    extends Layout {
+  def name: String = "bands"
+  def partCol: String = "bucket"
+  def schema: StructType = BandsSource.Schema
+  override def keyCol: Option[String] = Some("band_hash")
+  override def partitionOf(hash: Any): Long =
+    BandsSource.bucketOf(hash.asInstanceOf[Long], nBuckets)
+  def describe: String = s"nBuckets=$nBuckets"
+  def properties(path: String): Seq[(String, String)] =
+    Seq("tau" -> tau.toString, "nBuckets" -> nBuckets.toString)
 
-  /** Narrowed at execution time by [[filter]] — runtime sets INTERSECT
-    * the compile-time ones (dropping rows absent from a join's build
-    * side is always safe). */
-  @volatile private var rtBuckets: Option[Set[Long]] = buckets
-  @volatile private var rtHashes: Option[Set[Long]] = hashes
-
-  override def filterAttributes()
-      : Array[org.apache.spark.sql.connector.expressions.NamedReference] =
-    Seq("band_hash", "bucket").filter(required.fieldNames.contains)
-      .map(org.apache.spark.sql.connector.expressions.Expressions.column)
-      .toArray
-
-  override def filter(filters: Array[Filter]): Unit = filters.foreach {
-    case In("band_hash", vs) =>
-      val hs = vs.collect {
-        case l: java.lang.Long => l.longValue
-        case i: java.lang.Integer => i.longValue }.toSet
-      rtHashes = Some(rtHashes.fold(hs)(_ intersect hs))
-      val bs = hs.map(BandsSource.bucketOf(_, nBuckets))
-      rtBuckets = Some(rtBuckets.fold(bs)(_ intersect bs))
-    case EqualTo("band_hash", v: java.lang.Long) =>
-      rtHashes = Some(rtHashes.fold(Set(v.longValue))(
-        _ intersect Set(v.longValue)))
-      val bs = Set(BandsSource.bucketOf(v.longValue, nBuckets))
-      rtBuckets = Some(rtBuckets.fold(bs)(_ intersect bs))
-    case In("bucket", vs) =>
-      val bs = vs.collect {
-        case l: java.lang.Long => l.longValue
-        case i: java.lang.Integer => i.longValue }.toSet
-      rtBuckets = Some(rtBuckets.fold(bs)(_ intersect bs))
-    case _ => () // runtime filters are best-effort; unknown = no-op
-  }
-
-  /** Driver-side pruned file listing `(path, bucket, length)`: only
-    * the probed buckets' directories are listed at all. Committed
-    * transactional batch directories (`_batch-<id>`, the
-    * [[graft.operators.TxBatch]] atomic-publish roots) are listed
-    * alongside the base with the same bucket pruning. */
-  private[graft] def files: Seq[(String, Long, Long)] = {
-    val root = new Path(path)
-    val fs = root.getFileSystem(hconf.value)
-    // fold-tolerant: a concurrent TxBatch.compact sweeping a unit
-    // between the root listing and the per-unit listing retries once
-    // against a fresh listing instead of crashing the scan
-    CellsSource.foldTolerant(root, s"BandsSource scan at $path") {
-      // commit units = effective base + live batches (the TxBatch
-      // compaction rule); `roots` bounds the listing to named units —
-      // the protocol publishes whole unit directories atomically, so
-      // the allowlist is an exact file-set bound (the live consumers'
-      // offset-threading contract), translated across compactions
-      val rootDirs = CellsSource.allowedUnits(fs, root, roots)
-      CellsSource.listingFailpoint()
-      rootDirs.flatMap { r =>
-        val sts = fs.listStatus(r).toSeq
-        CellsSource.requireUnitFresh(root, r, sts)
-        val dirs = sts
-          .filter(s => s.isDirectory && s.getPath.getName.startsWith("bucket="))
-          .map(s => (s.getPath, s.getPath.getName.stripPrefix("bucket=").toLong))
-        val kept = rtBuckets match {
-          case Some(bs) => dirs.filter { case (_, b) => bs.contains(b) }
-          case None => dirs
-        }
-        kept.flatMap { case (dir, b) =>
-          fs.listStatus(dir).toSeq
-            .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-            .map(f => (f.getPath.toString, b, f.getLen))
-        }
-      }
+  def rowCheck(input: StructType): (InternalRow, Long) => Unit = {
+    val docOf = ParquetRowCodec.longAt(input, "doc_id")
+    val hashOf = ParquetRowCodec.longAt(input, "band_hash")
+    (r, bucket) => {
+      val docId = docOf(r)
+      if (docId < 0) throw new IllegalArgumentException(
+        s"BandsSource write: doc_id $docId is negative — the probe " +
+          "sign-flip encoding reserves negatives for batch ids")
+      val hash = hashOf(r)
+      val want = BandsSource.bucketOf(hash, nBuckets)
+      if (bucket != want) throw new IllegalArgumentException(
+        s"BandsSource write: row (band_hash=$hash, bucket=$bucket) does " +
+          s"not match the layout hash bucket $want for " +
+          s"nBuckets=$nBuckets — a mis-bucketed band row silently " +
+          "vanishes from pruned probes")
     }
   }
-
-  /** Statistics over the PRUNED listing — a probe touching a few
-    * bucket files reports their byte size, so Catalyst's own
-    * autoBroadcastJoinThreshold can elect to broadcast the probe
-    * without a manual hint. Row count is left unknown (compressed
-    * parquet bytes under-estimate rows; size is the broadcast
-    * decision input). */
-  override def estimateStatistics(): Statistics = new Statistics {
-    private val bytes = files.map(_._3).sum
-    override def sizeInBytes(): OptionalLong = OptionalLong.of(bytes)
-    override def numRows(): OptionalLong = OptionalLong.empty()
-  }
-
-  override def readSchema(): StructType = required
-
-  override def description(): String =
-    s"GraftBandsScan path=$path nBuckets=$nBuckets " +
-      s"buckets=${rtBuckets.map(_.toSeq.sorted.mkString("{", ",", "}"))
-        .getOrElse("ALL")} roots=${roots
-        .map(_.toSeq.sorted.mkString("{", ",", "}"))
-        .getOrElse("ALL")} files=${files.size} " +
-      s"PushedFilters: [${pushed.mkString(", ")}]"
-
-  override def toBatch: Batch = this
-
-  /** The band layout as a micro-batch STREAM of its own appends — the
-    * [[PostingsScan.toMicroBatchStream]] twin, completing the index
-    * family's symmetry: each trigger delivers exactly the parquet
-    * files that appeared since the last committed offset (the
-    * appendBands / DSv2-write / TxBatch maintenance contract adds
-    * files, never rewrites), which is the live feed the incremental
-    * near-dup lane (L40) tails instead of re-scanning the layout per
-    * run. Offsets are the set of files seen; compile-time bucket/hash
-    * pruning applies to the discovery listing exactly as to a batch
-    * scan. At 100 TB the offset-set stays proportional to FILE count
-    * (appends are batch-grained), not rows. */
-  override def toMicroBatchStream(
-      checkpointLocation: String): org.apache.spark.sql.connector.read
-        .streaming.MicroBatchStream =
-    new BandsMicroBatchStream(this, path, required.fieldNames,
-      rtHashes, hconf)
-
-  override def planInputPartitions(): Array[InputPartition] =
-    files.map { case (f, b, _) =>
-      BandsInputPartition(f, b): InputPartition }.toArray
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new BandsReaderFactory(required.fieldNames, rtHashes, hconf)
-}
-
-/** Offset = the set of layout files already delivered, serialized as
-  * ONE LINE of compact JSON (sorted array; Jackson quoting) — the
-  * [[PostingsOffset]] rule: Spark's OffsetSeqLog stores one offset per
-  * LINE, so a multi-line json() corrupts the checkpoint the moment an
-  * offset covers ≥ 2 files. */
-private[sources] case class BandsOffset(files: Set[String])
-    extends org.apache.spark.sql.connector.read.streaming.Offset {
-  override def json(): String =
-    BandsOffset.mapper.writeValueAsString(files.toSeq.sorted.toArray)
-}
-
-private[sources] object BandsOffset {
-  private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-  def fromJson(json: String): BandsOffset =
-    BandsOffset(mapper.readValue(json.trim,
-      classOf[Array[String]]).toSet)
-}
-
-private[sources] class BandsMicroBatchStream(scan: BandsScan,
-    path: String, cols: Array[String], hashes: Option[Set[Long]],
-    hconf: SerializableHadoopConf)
-    extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream {
-  import org.apache.spark.sql.connector.read.streaming.Offset
-
-  override def initialOffset(): Offset = BandsOffset(Set.empty)
-
-  override def latestOffset(): Offset =
-    BandsOffset(scan.files.map(_._1).toSet)
-
-  override def deserializeOffset(json: String): Offset =
-    BandsOffset.fromJson(json)
-
-  override def planInputPartitions(start: Offset,
-      end: Offset): Array[InputPartition] = {
-    val seen0 = start.asInstanceOf[BandsOffset].files
-    val now = end.asInstanceOf[BandsOffset].files
-    // a compaction between triggers rewrote file identity: translate
-    // the committed offset through the fold history (delivered units
-    // map onto the new base) instead of re-delivering the world —
-    // refuses loudly if the fold outran this consumer
-    val root = new Path(path)
-    val seen = graft.operators.TxBatch.translateOffsetFiles(
-      root.getFileSystem(hconf.value), root, seen0, now,
-      s"BandsSource stream at $path")
-    (now -- seen).toSeq.sorted.map { f =>
-      val bucket = new Path(f).getParent.getName
-        .stripPrefix("bucket=").toLong
-      BandsInputPartition(f, bucket): InputPartition
-    }.toArray
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new BandsReaderFactory(cols, hashes, hconf)
-
-  override def commit(end: Offset): Unit = ()
-  override def stop(): Unit = ()
-}
-
-private[sources] case class BandsInputPartition(file: String,
-    bucket: Long) extends InputPartition
-
-private[sources] class BandsReaderFactory(cols: Array[String],
-    hashes: Option[Set[Long]], hconf: SerializableHadoopConf)
-    extends PartitionReaderFactory {
-  override def createReader(
-      partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[BandsInputPartition]
-    new BandsPartitionReader(p.file, p.bucket, cols, hashes, hconf)
-  }
-}
-
-/** Row-group reader over one band data file: parquet-hadoop Group API,
-  * the pushed band-hash set re-checked per row (pushed filters are
-  * accepted, not advisory), required columns only. */
-private[sources] class BandsPartitionReader(file: String,
-    bucket: Long, cols: Array[String], hashes: Option[Set[Long]],
-    hconf: SerializableHadoopConf)
-    extends PartitionReader[InternalRow] {
-
-  private val reader = org.apache.parquet.hadoop.ParquetReader
-    .builder(new org.apache.parquet.hadoop.example.GroupReadSupport(),
-      new Path(file))
-    .withConf(hconf.value)
-    .build()
-
-  private var current: org.apache.parquet.example.data.Group = _
-
-  override def next(): Boolean = {
-    var g = reader.read()
-    while (g != null && hashes.exists(hs => !hs(g.getLong("band_hash", 0))))
-      g = reader.read()
-    current = g
-    g != null
-  }
-
-  override def get(): InternalRow = {
-    val vals = cols.map {
-      case "doc_id" => current.getLong("doc_id", 0)
-      case "band_no" => current.getInteger("band_no", 0)
-      case "band_hash" => current.getLong("band_hash", 0)
-      case "bucket" => bucket
-      case other => throw new IllegalArgumentException(
-        s"unknown bands column $other")
-    }
-    new GenericInternalRow(vals.asInstanceOf[Array[Any]])
-  }
-
-  override def close(): Unit = reader.close()
-}
-
-/** DSv2 APPEND write path — the [[BandIndex.appendBands]] maintenance
-  * contract through the connector, the [[PostingsWriteBuilder]] twin:
-  * bucket directories gain files, nothing is rewritten. Tasks stage
-  * files under a hidden job root; the job commit publishes them (see
-  * [[BandsBatchWrite]]); aborts delete the staged files. Per-row
-  * enforcement at the connector boundary: `bucket` must equal the
-  * layout hash `pmod(band_hash, nBuckets)` (a mis-bucketed band row
-  * silently vanishes from every pruned probe) and `doc_id` must be
-  * non-negative (the probe's sign-flip encoding reserves negatives
-  * for batch ids). */
-private[graft] class BandsWriteBuilder(path: String, nBuckets: Int,
-    input: StructType, hconf: SerializableHadoopConf)
-    extends org.apache.spark.sql.connector.write.WriteBuilder {
-  import org.apache.spark.sql.connector.write._
-  override def build(): Write = new Write {
-    override def toBatch: BatchWrite =
-      new BandsBatchWrite(path, nBuckets, input, hconf)
-    override def toStreaming: streaming.StreamingWrite = {
-      val streamRoot = new Path(path, ".staging-stream-" +
-        java.util.UUID.randomUUID().toString.take(12)).toString
-      new LayoutStreamingWrite(path, hconf,
-        new BandsStreamingWriterFactory(streamRoot, nBuckets, input,
-          hconf), streamRoot,
-        { case BandsCommit(fs) => fs; case _ => Seq.empty })
-    }
-  }
-}
-
-/** Streaming twin of [[BandsWriterFactory]]: the same per-row
-  * enforcing [[BandsDataWriter]], staged under the epoch's own
-  * subdirectory (epoch id ≡ the TxBatch batch id the commit
-  * publishes). */
-private[sources] class BandsStreamingWriterFactory(streamRoot: String,
-    nBuckets: Int, input: StructType, hconf: SerializableHadoopConf)
-    extends org.apache.spark.sql.connector.write.streaming
-      .StreamingDataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long,
-      epochId: Long)
-      : org.apache.spark.sql.connector.write.DataWriter[InternalRow] =
-    new BandsDataWriter(s"$streamRoot/$epochId", nBuckets, input,
-      hconf, partitionId, taskId)
-}
-
-private[sources] case class BandsCommit(files: Seq[String])
-    extends org.apache.spark.sql.connector.write.WriterCommitMessage
-
-/** Staged-rename batch write (the [[PostingsBatchWrite]] protocol):
-  * nothing is visible before [[commit]]; a failed job leaves the
-  * layout untouched. */
-private[sources] class BandsBatchWrite(path: String, nBuckets: Int,
-    input: StructType, hconf: SerializableHadoopConf)
-    extends org.apache.spark.sql.connector.write.BatchWrite {
-  import org.apache.spark.sql.connector.write._
-
-  private val stagingRoot = new Path(path,
-    ".staging-" + java.util.UUID.randomUUID().toString.take(12)).toString
-
-  override def createBatchWriterFactory(
-      info: PhysicalWriteInfo): DataWriterFactory =
-    new BandsWriterFactory(stagingRoot, nBuckets, input, hconf)
-
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val fs = new Path(path).getFileSystem(hconf.value)
-    messages.foreach {
-      case BandsCommit(rels) => rels.foreach { rel =>
-        val dst = new Path(path, rel)
-        fs.mkdirs(dst.getParent)
-        if (!fs.rename(new Path(stagingRoot, rel), dst))
-          throw new java.io.IOException(
-            s"BandsSource commit: rename of staged $rel failed")
-      }
-      case _ => ()
-    }
-    fs.delete(new Path(stagingRoot), true)
-  }
-
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val fs = new Path(path).getFileSystem(hconf.value)
-    fs.delete(new Path(stagingRoot), true)
-  }
-}
-
-private[sources] class BandsWriterFactory(stagingRoot: String,
-    nBuckets: Int, input: StructType, hconf: SerializableHadoopConf)
-    extends org.apache.spark.sql.connector.write.DataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long)
-      : org.apache.spark.sql.connector.write.DataWriter[InternalRow] =
-    new BandsDataWriter(stagingRoot, nBuckets, input, hconf,
-      partitionId, taskId)
-}
-
-private[sources] class BandsDataWriter(stagingRoot: String,
-    nBuckets: Int, input: StructType, hconf: SerializableHadoopConf,
-    partitionId: Int, taskId: Long)
-    extends org.apache.spark.sql.connector.write.DataWriter[InternalRow] {
-  import org.apache.parquet.example.data.Group
-  import org.apache.parquet.hadoop.ParquetWriter
-  import org.apache.parquet.hadoop.example.ExampleParquetWriter
-  import org.apache.parquet.schema.MessageTypeParser
-
-  private val fileType = MessageTypeParser.parseMessageType(
-    """message bands {
-      |  required int64 doc_id;
-      |  required int32 band_no;
-      |  required int64 band_hash;
-      |}""".stripMargin)
-  private val factory =
-    new org.apache.parquet.example.data.simple.SimpleGroupFactory(fileType)
-
-  private val iDoc = input.fieldIndex("doc_id")
-  private val iBandNo = input.fieldIndex("band_no")
-  private val iHash = input.fieldIndex("band_hash")
-  private val iBucket = input.fieldIndex("bucket")
-  private val bandNoIsLong = input("band_no").dataType == LongType
-  private val bucketIsInt = input("bucket").dataType == IntegerType
-
-  private val open =
-    scala.collection.mutable.Map.empty[Long, ParquetWriter[Group]]
-  private val files = scala.collection.mutable.ArrayBuffer.empty[String]
-
-  private def writerFor(bucket: Long): ParquetWriter[Group] =
-    open.getOrElseUpdate(bucket, {
-      val rel = s"bucket=$bucket/part-$partitionId-$taskId-" +
-        java.util.UUID.randomUUID().toString.take(8) + ".parquet"
-      files += rel
-      ExampleParquetWriter.builder(new Path(stagingRoot, rel))
-        .withType(fileType).withConf(hconf.value).build()
-    })
-
-  override def write(r: InternalRow): Unit = {
-    val docId = r.getLong(iDoc)
-    if (docId < 0) throw new IllegalArgumentException(
-      s"BandsSource write: doc_id $docId is negative — the probe " +
-        "sign-flip encoding reserves negatives for batch ids")
-    val hash = r.getLong(iHash)
-    val bucket =
-      if (bucketIsInt) r.getInt(iBucket).toLong else r.getLong(iBucket)
-    val want = BandsSource.bucketOf(hash, nBuckets)
-    if (bucket != want) throw new IllegalArgumentException(
-      s"BandsSource write: row (band_hash=$hash, bucket=$bucket) does " +
-        s"not match the layout hash bucket $want for " +
-        s"nBuckets=$nBuckets — a mis-bucketed band row silently " +
-        "vanishes from pruned probes")
-    val g = factory.newGroup()
-    g.append("doc_id", docId)
-    g.append("band_no",
-      if (bandNoIsLong) r.getLong(iBandNo).toInt else r.getInt(iBandNo))
-    g.append("band_hash", hash)
-    writerFor(bucket).write(g)
-  }
-
-  override def commit()
-      : org.apache.spark.sql.connector.write.WriterCommitMessage = {
-    open.values.foreach(_.close())
-    BandsCommit(files.toSeq)
-  }
-
-  override def abort(): Unit = {
-    open.values.foreach(w => scala.util.Try(w.close()))
-    val fs = new Path(stagingRoot).getFileSystem(hconf.value)
-    files.foreach(f => fs.delete(new Path(stagingRoot, f), false))
-  }
-
-  override def close(): Unit = ()
 }

@@ -1,36 +1,22 @@
 package graft.sources
 
-import java.util
-import java.util.OptionalLong
-
 import scala.jdk.CollectionConverters._
 
 import graft.operators.IvfIndex
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.sources.{EqualTo, Filter, In}
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.unsafe.types.UTF8String
 
 /** DataSource V2 connector for the [[IvfIndex.writeCellLayout]] IVF
-  * cell layout — the ANN-flagship twin of [[PostingsSource]] /
-  * [[BandsSource]]: a `cell` predicate against this source is pushed
-  * INTO the scan and prunes unprobed cell directories at file-listing
-  * time, runtime (DPP-style) filters from a probe-derived join narrow
-  * the listing further at execution time
-  * ([[SupportsRuntimeFiltering]]), and the scan reports statistics
-  * over the PRUNED listing ([[SupportsReportStatistics]]) so a
-  * probe-sized read broadcasts without a manual hint. At 100 TB this
-  * is the nprobe/k contract made visible on the scan node itself —
-  * "the probe touches 4/16 of the vectors" is the description string,
-  * not a helper's claim.
+  * cell layout: a `cell` predicate against this source is pushed INTO
+  * the scan and prunes unprobed cell directories at file-listing time,
+  * runtime (DPP-style) filters from a probe-derived join narrow the
+  * listing further at execution time, and the scan reports statistics
+  * over the PRUNED listing so a probe-sized read broadcasts without a
+  * manual hint. At 100 TB this is the nprobe/k contract made visible
+  * on the scan node itself — "the probe touches 4/16 of the vectors"
+  * is the description string, not a helper's claim.
   *
   * Usage:
   * {{{
@@ -45,47 +31,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * the connector infers the DATA schema from the layout's own parquet
   * footer and appends the `cell` partition column. Geometry (`k`,
   * `dim`) comes from the layout's `_graft_meta.json` stamp
-  * ([[IvfIndex.writeCellLayout]]); a geometry-less layout is refused,
-  * the [[BandsSource]] rule.
-  *
-  * Supported pushdown: EqualTo/In on `cell` (conjunctive value sets
-  * INTERSECT). Everything else returns to Spark as a post-scan filter.
-  * Column pruning is honored. Committed transactional batch
-  * directories (`_batch-<id>`, the append-maintenance lane) are listed
-  * alongside the base with the same cell pruning.
-  */
-class CellsSource extends TableProvider {
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
-    val path = options.get("path")
-    require(path != null && path.nonEmpty,
-      "graft.sources.CellsSource needs option 'path'")
-    CellsSource.layoutSchema(SparkSession.active, path)
-  }
+  * ([[IvfIndex.writeCellLayout]]); a geometry-less layout is refused.
+  * This file holds only the cell layout's definition ([[CellsLayout]]);
+  * the scan, stream and write path are the shared [[LayoutSource]]
+  * stack. */
+class CellsSource extends LayoutSource(CellsSource)
 
-  override def getTable(schema: StructType,
-      partitioning: Array[Transform],
-      properties: util.Map[String, String]): Table = {
-    val path = properties.get("path")
-    require(path != null && path.nonEmpty,
-      "graft.sources.CellsSource needs option 'path'")
-    // geometry-less layouts are refused at open time; explicit k/dim
-    // options (the append-side declaration of what the caller THINKS
-    // it is writing into) must match the stamp — the
-    // BandIndex.requireGeometry rule
-    val (k, dim) = IvfIndex.readCellMeta(SparkSession.active, path)
-    def opt(names: String*): Option[String] =
-      names.flatMap(n => Option(properties.get(n))).headOption
-    opt("k").foreach(v => require(v.toInt == k,
-      s"cell-layout geometry mismatch at $path: layout has k=$k, " +
-        s"option asked for k=$v"))
-    opt("dim").foreach(v => require(v.toInt == dim,
-      s"cell-layout geometry mismatch at $path: layout has dim=$dim, " +
-        s"option asked for dim=$v"))
-    new CellsTable(path, k, dim, schema)
-  }
-}
-
-object CellsSource {
+object CellsSource extends LayoutFormat {
 
   /** Data schema from the first data file's parquet footer, plus the
     * `cell` partition column (LongType — partition-directory values).
@@ -97,737 +49,90 @@ object CellsSource {
     val fs = root.getFileSystem(conf)
     // fold-tolerant like the scans: a fold can sweep the first-listed
     // file between the listing and the footer open
-    foldTolerant(root, s"CellsSource schema at $path") {
-      val first = listCellDirs(fs, root).iterator.flatMap { case (dir, _) =>
-        fs.listStatus(dir).iterator
-          .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-          .map(_.getPath)
-      }.take(1).toSeq.headOption.getOrElse(
-        throw new IllegalArgumentException(
-          s"cell layout at $path has no data files"))
+    LayoutSource.foldTolerant(root, s"CellsSource schema at $path") {
+      val first = LayoutSource.listPartDirs(fs, root, "cell", None)
+        .iterator.flatMap { case (dir, _) =>
+          fs.listStatus(dir).iterator
+            .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
+            .map(_.getPath)
+        }.take(1).toSeq.headOption.getOrElse(
+          throw new IllegalArgumentException(
+            s"cell layout at $path has no data files"))
       val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
         org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(first, conf))
       val mt =
         try reader.getFooter.getFileMetaData.getSchema
         finally reader.close()
       StructType(mt.getFields.asScala.toSeq.map(f =>
-        StructField(f.getName, parquetToCatalyst(f), nullable = true)) :+
+        StructField(f.getName, ParquetRowCodec.catalystType(f),
+          nullable = true)) :+
         StructField("cell", LongType, nullable = false))
     }
   }
 
-  /** The payload types a cell layout can carry through this reader. */
-  private def parquetToCatalyst(
-      f: org.apache.parquet.schema.Type): DataType = {
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-    f match {
-      case p: org.apache.parquet.schema.PrimitiveType =>
-        p.getPrimitiveTypeName match {
-          case INT64 => LongType
-          case INT32 => IntegerType
-          case DOUBLE => DoubleType
-          case FLOAT => FloatType
-          case BOOLEAN => BooleanType
-          case BINARY => StringType
-          case other => throw new IllegalArgumentException(
-            s"unsupported cell-layout column type $other (${f.getName})")
-        }
-      case g: org.apache.parquet.schema.GroupType
-          if g.getLogicalTypeAnnotation.isInstanceOf[
-            org.apache.parquet.schema.LogicalTypeAnnotation
-              .ListLogicalTypeAnnotation] =>
-        // Spark 3-level list: group(LIST) { repeated group list
-        // { element } }
-        val elem = g.getType(0).asGroupType().getType(0)
-          .asPrimitiveType().getPrimitiveTypeName
-        elem match {
-          case DOUBLE => ArrayType(DoubleType, containsNull = true)
-          case FLOAT => ArrayType(FloatType, containsNull = true)
-          case INT64 => ArrayType(LongType, containsNull = true)
-          case other => throw new IllegalArgumentException(
-            s"unsupported cell-layout array element $other (${f.getName})")
-        }
-      case other => throw new IllegalArgumentException(
-        s"unsupported cell-layout column ${other.getName}")
+  private[sources] def schemaAt(spark: SparkSession,
+      path: String): StructType = layoutSchema(spark, path)
+
+  /** Geometry-less layouts are refused at open time; explicit k/dim
+    * options (the append-side declaration of what the caller THINKS it
+    * is writing into) must match the stamp — the
+    * BandIndex.requireGeometry rule. */
+  private[sources] def open(spark: SparkSession, path: String,
+      opt: String => Option[String], schema: StructType): Layout = {
+    val (k, dim) = IvfIndex.readCellMeta(spark, path)
+    opt("k").foreach(v => require(v.toInt == k,
+      s"cell-layout geometry mismatch at $path: layout has k=$k, " +
+        s"option asked for k=$v"))
+    opt("dim").foreach(v => require(v.toInt == dim,
+      s"cell-layout geometry mismatch at $path: layout has dim=$dim, " +
+        s"option asked for dim=$v"))
+    CellsLayout(k, dim, schema)
+  }
+
+  /** The layout listing's test failpoint, under the name the specs
+    * install it by (see [[LayoutSource.listingFailpoint]]). */
+  private[graft] def listingFailpoint: () => Unit =
+    LayoutSource.listingFailpoint
+  private[graft] def listingFailpoint_=(f: () => Unit): Unit =
+    LayoutSource.listingFailpoint = f
+}
+
+/** The IVF cell layout: partitions are cells `1..k`, no key column.
+  * Per-row write enforcement: `cell` must lie in [1, k] (a row assigned
+  * against different centroids silently vanishes from every pruned
+  * probe), `vec_id` must be non-negative (the live probe's sign-flip
+  * encoding reserves negatives for batch ids) and a raw-vector payload
+  * `v` must carry exactly `dim` elements. */
+private[sources] case class CellsLayout(k: Int, dim: Int,
+    schema: StructType) extends Layout {
+  def name: String = "cells"
+  def partCol: String = "cell"
+  def describe: String = s"k=$k"
+  /** Geometry plus the centroid version ANN probes must match. */
+  def properties(path: String): Seq[(String, String)] =
+    Seq("k" -> k.toString, "dim" -> dim.toString) ++
+      SparkSession.getActiveSession
+        .flatMap(IvfIndex.readCentroidVersion(_, path))
+        .map("centroid_version" -> _).toSeq
+
+  def rowCheck(input: StructType): (InternalRow, Long) => Unit = {
+    val iVecId = input.fieldNames.indexOf("vec_id")
+    val iV = if (schema.fieldNames.contains("v") &&
+      schema("v").dataType.isInstanceOf[ArrayType]) input.fieldIndex("v")
+      else -1
+    (r, cell) => {
+      if (cell < 1 || cell > k) throw new IllegalArgumentException(
+        s"CellsSource write: cell $cell is outside [1, $k] — the row " +
+          "was assigned against different centroids (geometry mismatch)")
+      if (iVecId >= 0 && !r.isNullAt(iVecId) && r.getLong(iVecId) < 0)
+        throw new IllegalArgumentException(
+          s"CellsSource write: vec_id ${r.getLong(iVecId)} is negative — " +
+            "the probe sign-flip encoding reserves negatives for batch ids")
+      if (iV >= 0 && !r.isNullAt(iV) && r.getArray(iV).numElements() != dim)
+        throw new IllegalArgumentException(
+          s"CellsSource write: vector of ${r.getArray(iV).numElements()} " +
+            s"elements does not match the layout dim=$dim — a " +
+            "wrong-dimension vector corrupts every cosine it enters")
     }
   }
-
-  /** Name of the base root in a `roots` allowlist (the layout root
-    * itself, as opposed to a `_batch-<id>` append directory). */
-  val BaseRoot = "."
-
-  /** Parse a `roots` read option — a comma-separated allowlist of
-    * commit-unit names (`.` = the base, `_batch-<id>` = an append).
-    * An EMPTY string is an empty allowlist (read nothing), distinct
-    * from the option being absent (read everything): the live
-    * consumers bound a trigger's corpus to the files of its START
-    * offset, and the first trigger's start offset is empty. */
-  private[sources] def parseRoots(opt: String): Option[Set[String]] =
-    Option(opt).map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-
-  /** `(dir, cellId)` of every cell directory under the layout's
-    * effective commit units: the base (the root pre-compaction, the
-    * newest `_base-<gen>` after — the [[graft.operators.TxBatch]]
-    * compaction rule) plus the LIVE committed `_batch-*` append roots.
-    * `allow` restricts to named commit units (the TxBatch protocol
-    * publishes whole unit directories atomically, so a commit-unit
-    * allowlist is an exact file-set bound — the offset-threading
-    * contract the live consumers rely on). */
-  private[sources] def listCellDirs(fs: org.apache.hadoop.fs.FileSystem,
-      root: Path, allow: Option[Set[String]] = None): Seq[(Path, Long)] = {
-    val units = allowedUnits(fs, root, allow)
-    listingFailpoint()
-    units.flatMap { r =>
-      val sts = fs.listStatus(r).toSeq
-      requireUnitFresh(root, r, sts)
-      sts.filter(s => s.isDirectory && s.getPath.getName.startsWith("cell="))
-        .map(s => (s.getPath, s.getPath.getName.stripPrefix("cell=").toLong))
-    }
-  }
-
-  /** The layout's commit units restricted to an allowlist, with the
-    * allowlist TRANSLATED across compactions first
-    * ([[graft.operators.TxBatch.translateUnitsPre]]): a live
-    * consumer's corpus bound (the trigger's start-offset units)
-    * stays exact when a compaction folds units between offset
-    * capture and execution — delivered units map onto the new base,
-    * a half-processed fold refuses loudly (reading the new base then
-    * would over-widen the corpus and reintroduce the duplicate-pair
-    * race the bound exists to close). */
-  private[sources] def allowedUnits(fs: org.apache.hadoop.fs.FileSystem,
-      root: Path, allow: Option[Set[String]]): Seq[Path] = {
-    val (base, live) = graft.operators.TxBatch.layoutUnitsFs(fs, root)
-    val units = base +: live
-    allow match {
-      case None => units
-      case Some(a) =>
-        val a2 = graft.operators.TxBatch.translateUnitsPre(fs, root,
-          base, live, a, s"roots allowlist at $root")
-        units.filter(u => a2.contains(unitName(root, u)))
-    }
-  }
-
-  /** The layout's commit-unit directories: effective base + live
-    * batches, from ONE listing (shared by all three connectors —
-    * `files` runs per scan, so listing count sits on the probe's
-    * critical path). */
-  private[sources] def commitUnits(fs: org.apache.hadoop.fs.FileSystem,
-      root: Path): Seq[Path] = {
-    val (base, live) = graft.operators.TxBatch.layoutUnitsFs(fs, root)
-    base +: live
-  }
-
-  /** A commit unit's allowlist name: `.` for the legacy root base,
-    * the directory name (`_base-<gen>` / `_batch-<id>`) otherwise. */
-  private[sources] def unitName(root: Path, unit: Path): String =
-    if (unit == root) BaseRoot else unit.getName
-
-  /** The gen-0 half of the fold/listing TOCTOU detector: a swept
-    * `_batch-*`/`_base-*` unit FNFs on its own, but the legacy
-    * ROOT-as-base unit never does — a fold's cleanup just deletes its
-    * partition directories, so a stale resolution would return a
-    * silently EMPTY base instead of crashing. The same `listStatus`
-    * result betrays the race for free: a `_base-<gen>` child under a
-    * unit that was resolved AS the gen-0 base means a compaction
-    * published between resolution and listing — throw the FNF the
-    * fold-tolerant retry expects (the retry re-resolves to the new
-    * base, or surfaces the allowlist translation refusal). */
-  private[sources] def requireUnitFresh(root: Path, unit: Path,
-      statuses: Seq[org.apache.hadoop.fs.FileStatus]): Unit =
-    if (unit == root && statuses.exists(st =>
-        st.isDirectory && st.getPath.getName.startsWith("_base-")))
-      throw new java.io.FileNotFoundException(
-        s"$root: a base generation appeared under the gen-0 root " +
-          "mid-listing (concurrent compaction)")
-
-  /** Test failpoint for the fold/listing TOCTOU: invoked by each
-    * connector's `files` AFTER the commit units are resolved and
-    * BEFORE their contents are listed — exactly the window in which a
-    * concurrent [[graft.operators.TxBatch.compact]] can sweep a unit
-    * the root listing just returned. Specs install a one-shot fold
-    * here to hit the race deterministically; production leaves the
-    * no-op. */
-  @volatile private[graft] var listingFailpoint: () => Unit = () => ()
-
-  /** Is `t` the fold-sweep race's signature? Usually a
-    * FileNotFoundException — but Hadoop's RawLocalFileSystem raises a
-    * PLAIN IOException ("Invalid directory or I/O error occurred for
-    * dir: …") when `File.list()` returns null because the directory
-    * vanished between the existence probe and the listing, i.e. the
-    * SAME race on a local filesystem (observed: a live BANDS consumer
-    * racing an external fold of `_batch-N/bucket=M`). Matched by that
-    * Hadoop message shape so the fold-tolerant retry / documented
-    * refusal applies instead of leaking the raw IOException; a genuine
-    * persistent I/O error still surfaces — wrapped in the loud refusal
-    * with the original as cause — after the bounded retries. */
-  private[graft] def foldSweepRace(t: Throwable): Boolean = t match {
-    case _: java.io.FileNotFoundException => true
-    case e: java.io.IOException =>
-      // message shape observed on Hadoop 3.4.2's RawLocalFileSystem
-      // (listStatus); version-coupled by design — if an upgrade
-      // rewords it, this arm stops matching and behavior degrades to
-      // the FNF-only handling above (the pre-r17 shape), never to a
-      // wrong classification. CoexistenceSoakSpec pins today's shape.
-      val m = e.getMessage
-      m != null && m.startsWith("Invalid directory or I/O error")
-    case _ => false
-  }
-
-  /** Run one connector listing fold-tolerantly — the fix for the
-    * fold/trigger TOCTOU race: a [[graft.operators.TxBatch.compact]]
-    * sweeping a commit unit between the root listing and the per-unit
-    * `listStatus` throws FileNotFoundException from inside `body`.
-    * The fold is content-preserving and publishes atomically, so ONE
-    * fresh attempt sees a complete layout again (and, for allowlisted
-    * scans, re-resolves the allowlist through
-    * [[graft.operators.TxBatch.translateUnitsPre]], whose own refusal
-    * — the documented recovery — surfaces instead of the raw FNF). A
-    * second miss inside the retry means the layout is being deleted
-    * OUTSIDE the protocol: refuse loudly, never leak the raw FNF. */
-  private[sources] def foldTolerant[T](root: Path, context: String)(
-      body: => T): T = {
-    // a bounded handful of retries, not one: rapid successive folds
-    // (a maintenance hook catching up a backlog) can legitimately
-    // sweep a unit during the retry's own listing window
-    var attempt = 0
-    while (attempt < 3) {
-      try return body
-      catch { case e: java.io.IOException if foldSweepRace(e) =>
-        attempt += 1 }
-    }
-    try body
-    catch {
-      case e: java.io.IOException if foldSweepRace(e) =>
-        throw new IllegalStateException(
-          s"$context: commit units at $root keep disappearing " +
-            "mid-listing after fold-tolerant retries — the " +
-            "layout is being deleted outside the compaction " +
-            "protocol. Recovery: stop the consumer and reprocess " +
-            "the layout once from scratch under a FRESH " +
-            "checkpoint (idempotent TxBatch sinks dedup replayed " +
-            "work), or restore the layout from backup.", e)
-    }
-  }
-}
-
-private[sources] class CellsTable(path: String, k: Int, dim: Int,
-    tableSchema: StructType) extends Table with SupportsRead
-    with org.apache.spark.sql.connector.catalog.SupportsWrite {
-  override def name(): String = s"graft_cells($path)"
-  override def schema(): StructType = tableSchema
-  /** Operational TBLPROPERTIES — geometry stamp, base generation,
-    * live-batch fan-in, and the centroid version ANN probes must
-    * match (see [[LayoutProperties]]). */
-  override def properties(): util.Map[String, String] =
-    LayoutProperties.of(path, "cells",
-      Seq("k" -> k.toString, "dim" -> dim.toString) ++
-        SparkSession.getActiveSession
-          .flatMap(graft.operators.IvfIndex.readCentroidVersion(_, path))
-          .map("centroid_version" -> _).toSeq)
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ,
-      TableCapability.BATCH_WRITE,
-      TableCapability.MICRO_BATCH_READ,
-      TableCapability.STREAMING_WRITE)
-  override def newScanBuilder(
-      options: CaseInsensitiveStringMap): ScanBuilder =
-    new CellsScanBuilder(path, k, tableSchema,
-      CellsSource.parseRoots(options.get("roots")))
-  override def newWriteBuilder(
-      info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
-      : org.apache.spark.sql.connector.write.WriteBuilder =
-    new CellsWriteBuilder(path, k, dim, tableSchema, info.schema(),
-      new SerializableHadoopConf(
-        SparkSession.active.sparkContext.hadoopConfiguration))
-}
-
-private[graft] class CellsScanBuilder(path: String, k: Int,
-    tableSchema: StructType, roots: Option[Set[String]] = None)
-    extends ScanBuilder with SupportsPushDownFilters
-    with SupportsPushDownRequiredColumns {
-
-  private var pushed: Array[Filter] = Array.empty
-  /** None = no cell predicate pushed → scan every cell. */
-  private var cells: Option[Set[Long]] = None
-  private var required: StructType = tableSchema
-
-  private def cellValues(f: Filter): Option[Seq[Long]] = f match {
-    case EqualTo("cell", v: Long) => Some(Seq(v))
-    case EqualTo("cell", v: Int) => Some(Seq(v.toLong))
-    case In("cell", vs) if vs.forall(v =>
-      v.isInstanceOf[Long] || v.isInstanceOf[Int]) =>
-      Some(vs.toSeq.map {
-        case l: java.lang.Long => l.longValue
-        case i: java.lang.Integer => i.longValue
-      })
-    case _ => None
-  }
-
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    val (supported, residual) =
-      filters.partition(cellValues(_).isDefined)
-    pushed = supported
-    // conjunction semantics: each filter's value set INTERSECTS
-    val sets = supported.flatMap(cellValues(_).map(_.toSet))
-    if (sets.nonEmpty) cells = Some(sets.reduce(_ intersect _))
-    residual
-  }
-
-  override def pushedFilters(): Array[Filter] = pushed
-
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    required = requiredSchema
-
-  override def build(): Scan =
-    new CellsScan(path, k, required, cells, pushed,
-      new SerializableHadoopConf(
-        SparkSession.active.sparkContext.hadoopConfiguration), roots)
-}
-
-private[graft] class CellsScan(path: String, k: Int,
-    required: StructType, cells: Option[Set[Long]], pushed: Array[Filter],
-    hconf: SerializableHadoopConf, roots: Option[Set[String]] = None)
-    extends Scan with Batch
-    with SupportsRuntimeFiltering with SupportsReportStatistics {
-
-  /** Narrowed at execution time by [[filter]] — the DPP-style cell
-    * narrowing a probe-derived join injects; runtime sets INTERSECT
-    * the compile-time ones. */
-  @volatile private var rtCells: Option[Set[Long]] = cells
-
-  override def filterAttributes()
-      : Array[org.apache.spark.sql.connector.expressions.NamedReference] =
-    Seq("cell").filter(required.fieldNames.contains)
-      .map(org.apache.spark.sql.connector.expressions.Expressions.column)
-      .toArray
-
-  override def filter(filters: Array[Filter]): Unit = filters.foreach {
-    case In("cell", vs) =>
-      val cs = vs.collect {
-        case l: java.lang.Long => l.longValue
-        case i: java.lang.Integer => i.longValue }.toSet
-      rtCells = Some(rtCells.fold(cs)(_ intersect cs))
-    case EqualTo("cell", v: java.lang.Long) =>
-      rtCells = Some(rtCells.fold(Set(v.longValue))(
-        _ intersect Set(v.longValue)))
-    case _ => () // runtime filters are best-effort; unknown = no-op
-  }
-
-  /** Driver-side pruned listing `(file, cell, bytes)`: only probed
-    * cells' directories are listed at all. */
-  private[graft] def files: Seq[(String, Long, Long)] = {
-    val root = new Path(path)
-    val fs = root.getFileSystem(hconf.value)
-    // fold-tolerant: a concurrent TxBatch.compact sweeping a unit
-    // between the root listing and the per-unit listing retries once
-    // against a fresh listing instead of crashing the scan
-    CellsSource.foldTolerant(root, s"CellsSource scan at $path") {
-      val dirs = CellsSource.listCellDirs(fs, root, roots)
-      val kept = rtCells match {
-        case Some(cs) => dirs.filter { case (_, c) => cs.contains(c) }
-        case None => dirs
-      }
-      kept.flatMap { case (dir, c) =>
-        fs.listStatus(dir).toSeq
-          .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-          .map(f => (f.getPath.toString, c, f.getLen))
-      }
-    }
-  }
-
-  /** Statistics over the PRUNED listing — an nprobe-cell read reports
-    * nprobe/k of the bytes, so Catalyst's autoBroadcastJoinThreshold
-    * can elect to broadcast a probe-sized read without a hint. */
-  override def estimateStatistics(): Statistics = new Statistics {
-    private val bytes = files.map(_._3).sum
-    override def sizeInBytes(): OptionalLong = OptionalLong.of(bytes)
-    override def numRows(): OptionalLong = OptionalLong.empty()
-  }
-
-  override def readSchema(): StructType = required
-
-  override def description(): String =
-    s"GraftCellsScan path=$path k=$k " +
-      s"cells=${rtCells.map(_.toSeq.sorted.mkString("{", ",", "}"))
-        .getOrElse("ALL")} roots=${roots
-        .map(_.toSeq.sorted.mkString("{", ",", "}"))
-        .getOrElse("ALL")} files=${files.size} " +
-      s"PushedFilters: [${pushed.mkString(", ")}]"
-
-  override def toBatch: Batch = this
-
-  /** The cell layout as a micro-batch STREAM of its own appends — the
-    * [[PostingsScan]]/[[BandsScan]] twin, completing the index
-    * family's symmetry for the ANN flagship: each trigger delivers
-    * exactly the parquet files that appeared since the last committed
-    * offset (the appendCellsIdempotent / TxBatch maintenance contract
-    * adds files, never rewrites), which is the live feed the
-    * incremental semantic-dedup lane tails instead of re-scanning the
-    * corpus per run. Offsets are the set of files seen; compile-time
-    * cell pruning applies to the discovery listing exactly as to a
-    * batch scan. At 100 TB the offset-set stays proportional to FILE
-    * count (appends are batch-grained), not rows. */
-  override def toMicroBatchStream(
-      checkpointLocation: String): org.apache.spark.sql.connector.read
-        .streaming.MicroBatchStream =
-    new CellsMicroBatchStream(this, path, required, hconf)
-
-  override def planInputPartitions(): Array[InputPartition] =
-    files.map { case (f, c, _) =>
-      CellsInputPartition(f, c): InputPartition }.toArray
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new CellsReaderFactory(required, hconf)
-}
-
-/** Offset = the set of layout files already delivered, serialized as
-  * ONE LINE of compact JSON (sorted array; Jackson quoting) — the
-  * PostingsOffset/BandsOffset rule: Spark's OffsetSeqLog stores one
-  * offset per LINE, so a multi-line json() corrupts the checkpoint the
-  * moment an offset covers ≥ 2 files. */
-private[sources] case class CellsOffset(files: Set[String])
-    extends org.apache.spark.sql.connector.read.streaming.Offset {
-  override def json(): String =
-    CellsOffset.mapper.writeValueAsString(files.toSeq.sorted.toArray)
-}
-
-private[sources] object CellsOffset {
-  private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-  def fromJson(json: String): CellsOffset =
-    CellsOffset(mapper.readValue(json.trim,
-      classOf[Array[String]]).toSet)
-}
-
-private[sources] class CellsMicroBatchStream(scan: CellsScan,
-    path: String, required: StructType, hconf: SerializableHadoopConf)
-    extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream {
-  import org.apache.spark.sql.connector.read.streaming.Offset
-
-  override def initialOffset(): Offset = CellsOffset(Set.empty)
-
-  override def latestOffset(): Offset =
-    CellsOffset(scan.files.map(_._1).toSet)
-
-  override def deserializeOffset(json: String): Offset =
-    CellsOffset.fromJson(json)
-
-  override def planInputPartitions(start: Offset,
-      end: Offset): Array[InputPartition] = {
-    val seen0 = start.asInstanceOf[CellsOffset].files
-    val now = end.asInstanceOf[CellsOffset].files
-    // compaction-survival: translate the committed offset through
-    // the fold history (see BandsMicroBatchStream)
-    val root = new Path(path)
-    val seen = graft.operators.TxBatch.translateOffsetFiles(
-      root.getFileSystem(hconf.value), root, seen0, now,
-      s"CellsSource stream at $path")
-    (now -- seen).toSeq.sorted.map { f =>
-      val cell = new Path(f).getParent.getName
-        .stripPrefix("cell=").toLong
-      CellsInputPartition(f, cell): InputPartition
-    }.toArray
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new CellsReaderFactory(required, hconf)
-
-  override def commit(end: Offset): Unit = ()
-  override def stop(): Unit = ()
-}
-
-private[sources] case class CellsInputPartition(file: String,
-    cell: Long) extends InputPartition
-
-private[sources] class CellsReaderFactory(required: StructType,
-    hconf: SerializableHadoopConf) extends PartitionReaderFactory {
-  override def createReader(
-      partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[CellsInputPartition]
-    new CellsPartitionReader(p.file, p.cell, required, hconf)
-  }
-}
-
-/** DSv2 APPEND write path — the ANN-index maintenance contract
-  * through the connector, the [[BandsWriteBuilder]] twin: cell
-  * directories gain files, nothing is rewritten. Tasks stage files
-  * under a hidden job root; the job commit publishes them
-  * ([[CellsBatchWrite]]); aborts delete the staged files. Per-row
-  * enforcement at the connector boundary: `cell` must lie in [1, k]
-  * (a row assigned against different centroids silently vanishes from
-  * every pruned probe), a raw-vector payload must carry exactly `dim`
-  * elements, and `vec_id` must be non-negative (the live probe's
-  * sign-flip encoding reserves negatives for batch ids). The payload
-  * columns are whatever the layout schema carries (vectors, PQ codes —
-  * the schema came from the layout's own footer), so the writer builds
-  * its parquet schema from the table schema, not a fixed message. */
-private[graft] class CellsWriteBuilder(path: String, k: Int, dim: Int,
-    tableSchema: StructType, input: StructType,
-    hconf: SerializableHadoopConf)
-    extends org.apache.spark.sql.connector.write.WriteBuilder {
-  import org.apache.spark.sql.connector.write._
-  override def build(): Write = new Write {
-    override def toBatch: BatchWrite =
-      new CellsBatchWrite(path, k, dim, tableSchema, input, hconf)
-    override def toStreaming: streaming.StreamingWrite = {
-      val streamRoot = new Path(path, ".staging-stream-" +
-        java.util.UUID.randomUUID().toString.take(12)).toString
-      new LayoutStreamingWrite(path, hconf,
-        new CellsStreamingWriterFactory(streamRoot, k, dim,
-          tableSchema, input, hconf), streamRoot,
-        { case CellsCommit(fs) => fs; case _ => Seq.empty })
-    }
-  }
-}
-
-/** Streaming twin of [[CellsWriterFactory]]: the same per-row
-  * enforcing [[CellsDataWriter]], staged under the epoch's own
-  * subdirectory (epoch id ≡ the TxBatch batch id the commit
-  * publishes). */
-private[sources] class CellsStreamingWriterFactory(streamRoot: String,
-    k: Int, dim: Int, tableSchema: StructType, input: StructType,
-    hconf: SerializableHadoopConf)
-    extends org.apache.spark.sql.connector.write.streaming
-      .StreamingDataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long,
-      epochId: Long)
-      : org.apache.spark.sql.connector.write.DataWriter[InternalRow] =
-    new CellsDataWriter(s"$streamRoot/$epochId", k, dim, tableSchema,
-      input, hconf, partitionId, taskId)
-}
-
-private[sources] case class CellsCommit(files: Seq[String])
-    extends org.apache.spark.sql.connector.write.WriterCommitMessage
-
-/** Staged-rename batch write (the [[BandsBatchWrite]] protocol):
-  * nothing is visible before [[commit]]; a failed job leaves the
-  * layout untouched. */
-private[sources] class CellsBatchWrite(path: String, k: Int, dim: Int,
-    tableSchema: StructType, input: StructType,
-    hconf: SerializableHadoopConf)
-    extends org.apache.spark.sql.connector.write.BatchWrite {
-  import org.apache.spark.sql.connector.write._
-
-  private val stagingRoot = new Path(path,
-    ".staging-" + java.util.UUID.randomUUID().toString.take(12)).toString
-
-  override def createBatchWriterFactory(
-      info: PhysicalWriteInfo): DataWriterFactory =
-    new CellsWriterFactory(stagingRoot, k, dim, tableSchema, input, hconf)
-
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val fs = new Path(path).getFileSystem(hconf.value)
-    messages.foreach {
-      case CellsCommit(rels) => rels.foreach { rel =>
-        val dst = new Path(path, rel)
-        fs.mkdirs(dst.getParent)
-        if (!fs.rename(new Path(stagingRoot, rel), dst))
-          throw new java.io.IOException(
-            s"CellsSource commit: rename of staged $rel failed")
-      }
-      case _ => ()
-    }
-    fs.delete(new Path(stagingRoot), true)
-  }
-
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val fs = new Path(path).getFileSystem(hconf.value)
-    fs.delete(new Path(stagingRoot), true)
-  }
-}
-
-private[sources] class CellsWriterFactory(stagingRoot: String, k: Int,
-    dim: Int, tableSchema: StructType, input: StructType,
-    hconf: SerializableHadoopConf)
-    extends org.apache.spark.sql.connector.write.DataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long)
-      : org.apache.spark.sql.connector.write.DataWriter[InternalRow] =
-    new CellsDataWriter(stagingRoot, k, dim, tableSchema, input, hconf,
-      partitionId, taskId)
-}
-
-private[sources] class CellsDataWriter(stagingRoot: String, k: Int,
-    dim: Int, tableSchema: StructType, input: StructType,
-    hconf: SerializableHadoopConf, partitionId: Int, taskId: Long)
-    extends org.apache.spark.sql.connector.write.DataWriter[InternalRow] {
-  import org.apache.parquet.example.data.Group
-  import org.apache.parquet.hadoop.ParquetWriter
-  import org.apache.parquet.hadoop.example.ExampleParquetWriter
-  import org.apache.parquet.schema.MessageTypeParser
-
-  /** Payload columns = the layout schema minus the `cell` partition
-    * directory value; the parquet message mirrors the reader's
-    * supported type set exactly (one writer, one reader, one list
-    * shape). */
-  private val payload = tableSchema.fields.filter(_.name != "cell")
-
-  private def parquetDecl(f: StructField): String = f.dataType match {
-    case LongType => s"optional int64 ${f.name};"
-    case IntegerType => s"optional int32 ${f.name};"
-    case DoubleType => s"optional double ${f.name};"
-    case FloatType => s"optional float ${f.name};"
-    case BooleanType => s"optional boolean ${f.name};"
-    case StringType => s"optional binary ${f.name} (UTF8);"
-    case ArrayType(et, _) =>
-      val e = et match {
-        case DoubleType => "double"
-        case FloatType => "float"
-        case LongType => "int64"
-        case other => throw new IllegalArgumentException(
-          s"unsupported cell-layout array element $other (${f.name})")
-      }
-      s"optional group ${f.name} (LIST) " +
-        s"{ repeated group list { optional $e element; } }"
-    case other => throw new IllegalArgumentException(
-      s"unsupported cell-layout column type $other (${f.name})")
-  }
-
-  private val fileType = MessageTypeParser.parseMessageType(
-    payload.map(parquetDecl)
-      .mkString("message cells {\n", "\n", "\n}"))
-  private val factory =
-    new org.apache.parquet.example.data.simple.SimpleGroupFactory(fileType)
-
-  private val iCell = input.fieldIndex("cell")
-  private val cellIsInt = input("cell").dataType == IntegerType
-  private val payloadIdx = payload.map(f => input.fieldIndex(f.name))
-  private val iVecId = input.fieldNames.indexOf("vec_id")
-
-  private val open =
-    scala.collection.mutable.Map.empty[Long, ParquetWriter[Group]]
-  private val files = scala.collection.mutable.ArrayBuffer.empty[String]
-
-  private def writerFor(cell: Long): ParquetWriter[Group] =
-    open.getOrElseUpdate(cell, {
-      val rel = s"cell=$cell/part-$partitionId-$taskId-" +
-        java.util.UUID.randomUUID().toString.take(8) + ".parquet"
-      files += rel
-      ExampleParquetWriter.builder(new Path(stagingRoot, rel))
-        .withType(fileType).withConf(hconf.value).build()
-    })
-
-  private def appendField(g: Group, f: StructField, r: InternalRow,
-      idx: Int): Unit = {
-    if (r.isNullAt(idx)) return
-    f.dataType match {
-      case LongType => g.append(f.name, r.getLong(idx))
-      case IntegerType => g.append(f.name, r.getInt(idx))
-      case DoubleType => g.append(f.name, r.getDouble(idx))
-      case FloatType => g.append(f.name, r.getFloat(idx))
-      case BooleanType => g.append(f.name, r.getBoolean(idx))
-      case StringType => g.append(f.name, r.getUTF8String(idx).toString)
-      case ArrayType(et, _) =>
-        val arr = r.getArray(idx)
-        if (f.name == "v" && arr.numElements() != dim)
-          throw new IllegalArgumentException(
-            s"CellsSource write: vector of ${arr.numElements()} " +
-              s"elements does not match the layout dim=$dim — a " +
-              "wrong-dimension vector corrupts every cosine it enters")
-        val lg = g.addGroup(f.name)
-        var i = 0
-        while (i < arr.numElements()) {
-          val eg = lg.addGroup("list")
-          if (!arr.isNullAt(i)) et match {
-            case DoubleType => eg.append("element", arr.getDouble(i))
-            case FloatType => eg.append("element", arr.getFloat(i))
-            case LongType => eg.append("element", arr.getLong(i))
-            case other => throw new IllegalArgumentException(
-              s"unsupported cell-layout array element type $other")
-          }
-          i += 1
-        }
-      case other => throw new IllegalArgumentException(
-        s"unsupported cell-layout column type $other (${f.name})")
-    }
-  }
-
-  override def write(r: InternalRow): Unit = {
-    val cell =
-      if (cellIsInt) r.getInt(iCell).toLong else r.getLong(iCell)
-    if (cell < 1 || cell > k) throw new IllegalArgumentException(
-      s"CellsSource write: cell $cell is outside [1, $k] — the row " +
-        "was assigned against different centroids (geometry mismatch)")
-    if (iVecId >= 0 && !r.isNullAt(iVecId) && r.getLong(iVecId) < 0)
-      throw new IllegalArgumentException(
-        s"CellsSource write: vec_id ${r.getLong(iVecId)} is negative — " +
-          "the probe sign-flip encoding reserves negatives for batch ids")
-    val g = factory.newGroup()
-    payload.indices.foreach(i =>
-      appendField(g, payload(i), r, payloadIdx(i)))
-    writerFor(cell).write(g)
-  }
-
-  override def commit()
-      : org.apache.spark.sql.connector.write.WriterCommitMessage = {
-    open.values.foreach(_.close())
-    CellsCommit(files.toSeq)
-  }
-
-  override def abort(): Unit = {
-    open.values.foreach(w => scala.util.Try(w.close()))
-    val fs = new Path(stagingRoot).getFileSystem(hconf.value)
-    files.foreach(f => fs.delete(new Path(stagingRoot, f), false))
-  }
-
-  override def close(): Unit = ()
-}
-
-/** Row-group reader over one cell data file: parquet-hadoop Group API,
-  * schema-driven field extraction (the payload is whatever the layout
-  * builder wrote), required columns only. */
-private[sources] class CellsPartitionReader(file: String, cell: Long,
-    required: StructType, hconf: SerializableHadoopConf)
-    extends PartitionReader[InternalRow] {
-
-  private val reader = org.apache.parquet.hadoop.ParquetReader
-    .builder(new org.apache.parquet.hadoop.example.GroupReadSupport(),
-      new Path(file))
-    .withConf(hconf.value)
-    .build()
-
-  private var current: org.apache.parquet.example.data.Group = _
-
-  override def next(): Boolean = {
-    current = reader.read()
-    current != null
-  }
-
-  private def valueOf(name: String, dt: DataType): Any = {
-    val g = current
-    val idx = g.getType.getFieldIndex(name)
-    if (g.getFieldRepetitionCount(idx) == 0) return null
-    dt match {
-      case LongType => g.getLong(idx, 0)
-      case IntegerType => g.getInteger(idx, 0)
-      case DoubleType => g.getDouble(idx, 0)
-      case FloatType => g.getFloat(idx, 0)
-      case BooleanType => g.getBoolean(idx, 0)
-      case StringType => UTF8String.fromString(g.getString(idx, 0))
-      case ArrayType(et, _) =>
-        val lg = g.getGroup(idx, 0)
-        val n = lg.getFieldRepetitionCount(0)
-        val vals: Array[Any] = Array.tabulate[Any](n) { i =>
-          val eg = lg.getGroup(0, i)
-          if (eg.getFieldRepetitionCount(0) == 0) null
-          else et match {
-            case DoubleType => eg.getDouble(0, 0)
-            case FloatType => eg.getFloat(0, 0)
-            case LongType => eg.getLong(0, 0)
-            case other => throw new IllegalArgumentException(
-              s"unsupported cell-layout array element type $other")
-          }
-        }
-        new GenericArrayData(vals)
-      case other => throw new IllegalArgumentException(
-        s"unsupported cell-layout column type $other ($name)")
-    }
-  }
-
-  override def get(): InternalRow = {
-    val vals = required.fields.map { f =>
-      if (f.name == "cell") cell else valueOf(f.name, f.dataType)
-    }
-    new GenericInternalRow(vals.asInstanceOf[Array[Any]])
-  }
-
-  override def close(): Unit = reader.close()
 }

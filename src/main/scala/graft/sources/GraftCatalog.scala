@@ -2,12 +2,11 @@ package graft.sources
 
 import java.util
 
-import graft.operators.{BandIndex, InvertedIndex, IvfIndex, TxBatch}
+import graft.operators.TxBatch
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.{NoSuchNamespaceException, NoSuchTableException}
 import org.apache.spark.sql.connector.catalog._
-import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** `TableCatalog` plugin over a directory tree of graft index
@@ -109,17 +108,13 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
               s"cell-layout keys (k, dim) and the band-layout keys " +
               s"(tau, nBuckets) — refusing to guess the layout type " +
               s"($meta)")
-        if (isCells) {
-          val (k, dim) = IvfIndex.readCellMeta(spark, path)
-          new CellsTable(path, k, dim,
-            CellsSource.layoutSchema(spark, path))
-        } else if (isBands) {
-          val (tau, nb) = BandIndex.readMeta(spark, path)
-          new BandsTable(path, nb, tau)
-        } else if (keys("nBuckets")) {
-          new PostingsTable(path,
-            InvertedIndex.readStampedBuckets(spark, path).get)
-        } else throw new NoSuchTableException(ident)
+        val format: LayoutFormat =
+          if (isCells) CellsSource
+          else if (isBands) BandsSource
+          else if (keys("nBuckets")) PostingsSource
+          else throw new NoSuchTableException(ident)
+        new LayoutTable(path, format.open(spark, path, _ => None,
+          format.schemaAt(spark, path)))
       case _ => throw new NoSuchTableException(ident)
     }
   }

@@ -5,7 +5,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.connector.write.WriterCommitMessage
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
 
-/** Native `STREAMING_WRITE` for the three index-layout connectors —
+/** Native `STREAMING_WRITE` for the index-layout connectors —
   * `writeStream.format("graft.sources.PostingsSource")` (or Bands /
   * Cells) commits each micro-batch through the [[TxBatch]] manifest
   * protocol, epoch id ≡ batch id:
@@ -28,8 +28,7 @@ import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactor
   * lanes speak the same protocol, so they compose on one layout. */
 private[sources] class LayoutStreamingWrite(path: String,
     hconf: SerializableHadoopConf,
-    factory: StreamingDataWriterFactory, streamRoot: String,
-    extract: WriterCommitMessage => Seq[String])
+    factory: StreamingDataWriterFactory, streamRoot: String)
     extends StreamingWrite {
 
   override def createStreamingWriterFactory(
@@ -83,7 +82,10 @@ private[sources] class LayoutStreamingWrite(path: String,
     val root = new Path(path)
     val fs = root.getFileSystem(hconf.value)
     val epoch = epochDir(epochId)
-    val rels = messages.toSeq.flatMap(extract)
+    val rels = messages.toSeq.flatMap {
+      case LayoutCommit(files) => files
+      case _ => Seq.empty
+    }
     if (rels.isEmpty) { fs.delete(epoch, true); return }
     // re-delivered epoch: the batch is already published (directory
     // present, or folded into a compacted base) — drop the staging

@@ -1,51 +1,17 @@
 package graft.sources
 
-import java.util
-
-import scala.jdk.CollectionConverters._
-
 import graft.operators.InvertedIndex
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.sources.{EqualTo, Filter, In}
-import org.apache.spark.sql.types._
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.types._
 
-/** Serializable carrier for the session's Hadoop configuration so the
-  * per-file readers see the same filesystem settings (object-store
-  * credentials, custom schemes) as the driver-side listing — a bare
-  * `new Configuration()` works on the local fs only.
-  * ([[org.apache.spark.util.SerializableConfiguration]] is
-  * `private[spark]`, hence this local twin.) */
-private[sources] class SerializableHadoopConf(
-    @transient var value: Configuration) extends Serializable {
-  private def writeObject(out: java.io.ObjectOutputStream): Unit = {
-    out.defaultWriteObject()
-    value.write(out)
-  }
-  private def readObject(in: java.io.ObjectInputStream): Unit = {
-    in.defaultReadObject()
-    value = new Configuration(false)
-    value.readFields(in)
-  }
-}
-
-/** DataSource V2 connector for the [[InvertedIndex]] term layout —
-  * the index-native scan node the path-level helpers approximate:
-  * a `term = 'x'` / `term IN (...)` predicate against this source is
+/** DataSource V2 connector for the [[InvertedIndex]] term layout — the
+  * index-native scan node the path-level helpers approximate: a
+  * `term = 'x'` / `term IN (...)` predicate against this source is
   * pushed INTO the scan, where it derives the bucket set via the
   * layout's own hash (`bucket = pmod(fnv1a(term), nBuckets)`) and
-  * prunes unprobed bucket directories at file-listing time. The
-  * pruning is therefore visible in the plan itself (the scan's
-  * description reports the pushed filters and the listed-file count),
-  * instead of living in a helper that pre-lists paths.
+  * prunes unprobed bucket directories at file-listing time, so the
+  * pruning is visible in the plan itself.
   *
   * Usage:
   * {{{
@@ -54,50 +20,15 @@ private[sources] class SerializableHadoopConf(
   *     .filter($"term".isin("alpha", "beta"))
   * }}}
   *
-  * Supported pushdown: EqualTo/In on `term` (each value hashes to its
-  * bucket — the union of probed buckets is the listing filter; the
-  * residual term equality is ALSO evaluated by the reader, so the
-  * pushed filters are accepted, not merely advisory) and EqualTo/In
-  * on `bucket` (direct partition pruning). Everything else is
-  * returned to Spark as a post-scan filter. Column pruning is
-  * honored (`SupportsPushDownRequiredColumns`).
-  *
-  * The reader is a plain row-group parquet reader (parquet-hadoop
-  * Group API) — index probes read a few small files of the pruned
-  * buckets, where scan setup, not decode vectorization, dominates.
-  * One InputPartition per data file keeps probe parallelism at the
-  * file grain, matching the layout's append-maintenance (each
-  * appended batch adds files, never rewrites).
-  */
-class PostingsSource extends TableProvider {
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    PostingsSource.Schema
+  * This file holds only the term layout's definition ([[PostingsLayout]]);
+  * the scan, stream and write path are the shared [[LayoutSource]] stack.
+  * The one-row `.stats` relation rides OUTSIDE the connector (it is a
+  * different relation, not a postings row) — callers append it as
+  * [[InvertedIndex.appendPostings]] does; `bm25` merges the stats rows
+  * at read time. */
+class PostingsSource extends LayoutSource(PostingsSource)
 
-  override def getTable(schema: StructType,
-      partitioning: Array[Transform],
-      properties: util.Map[String, String]): Table = {
-    val path = properties.get("path")
-    require(path != null && path.nonEmpty,
-      "graft.sources.PostingsSource needs option 'path'")
-    // a stamped layout carries its own nBuckets (_graft_meta.json,
-    // the BandsSource rule) — an explicit option must AGREE with it;
-    // stamp-less legacy layouts fall back to option-or-64
-    val stamped = graft.operators.InvertedIndex.readStampedBuckets(
-      SparkSession.active, path)
-    val opted = Option(properties.get("nbuckets"))
-      .orElse(Option(properties.get("nBuckets"))).map(_.toInt)
-    (stamped, opted) match {
-      case (Some(sn), Some(on)) => require(sn == on,
-        s"term-layout geometry mismatch at $path: layout is stamped " +
-          s"nBuckets=$sn, option asked for nBuckets=$on — a wrong " +
-          "bucket count silently prunes the wrong directories")
-      case _ => ()
-    }
-    new PostingsTable(path, stamped.orElse(opted).getOrElse(64))
-  }
-}
-
-object PostingsSource {
+object PostingsSource extends LayoutFormat {
   /** Layout schema — `bucket` is the partition directory value. */
   val Schema: StructType = StructType(Seq(
     StructField("term", StringType, nullable = false),
@@ -105,530 +36,52 @@ object PostingsSource {
     StructField("dl", LongType, nullable = false),
     StructField("tf", LongType, nullable = false),
     StructField("bucket", LongType, nullable = false)))
-}
 
-private[sources] class PostingsTable(path: String, nBuckets: Int)
-    extends Table with SupportsRead
-    with org.apache.spark.sql.connector.catalog.SupportsWrite {
-  override def name(): String = s"graft_postings($path)"
-  override def schema(): StructType = PostingsSource.Schema
-  /** Operational TBLPROPERTIES — geometry stamp, base generation,
-    * live-batch fan-in (see [[LayoutProperties]]). */
-  override def properties(): util.Map[String, String] =
-    LayoutProperties.of(path, "postings",
-      Seq("nBuckets" -> nBuckets.toString))
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ,
-      TableCapability.BATCH_WRITE,
-      TableCapability.MICRO_BATCH_READ,
-      TableCapability.STREAMING_WRITE)
-  override def newScanBuilder(
-      options: CaseInsensitiveStringMap): ScanBuilder =
-    new PostingsScanBuilder(path, nBuckets,
-      CellsSource.parseRoots(options.get("roots")))
-  override def newWriteBuilder(
-      info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
-      : org.apache.spark.sql.connector.write.WriteBuilder =
-    new PostingsWriteBuilder(path, nBuckets, info.schema(),
-      new SerializableHadoopConf(
-        SparkSession.active.sparkContext.hadoopConfiguration))
-}
+  private[sources] def schemaAt(spark: SparkSession,
+      path: String): StructType = Schema
 
-private[graft] class PostingsScanBuilder(path: String, nBuckets: Int,
-    roots: Option[Set[String]] = None)
-    extends ScanBuilder with SupportsPushDownFilters
-    with SupportsPushDownRequiredColumns {
-
-  private var pushed: Array[Filter] = Array.empty
-  /** None = no term/bucket predicate pushed → scan every bucket. */
-  private var buckets: Option[Set[Long]] = None
-  private var terms: Option[Set[String]] = None
-  private var required: StructType = PostingsSource.Schema
-
-  private def termValues(f: Filter): Option[Seq[String]] = f match {
-    case EqualTo("term", v: String) => Some(Seq(v))
-    case In("term", vs) if vs.forall(_.isInstanceOf[String]) =>
-      Some(vs.toSeq.map(_.asInstanceOf[String]))
-    case _ => None
-  }
-
-  private def bucketValues(f: Filter): Option[Seq[Long]] = f match {
-    case EqualTo("bucket", v: Long) => Some(Seq(v))
-    case EqualTo("bucket", v: Int) => Some(Seq(v.toLong))
-    case In("bucket", vs) if vs.forall(v =>
-      v.isInstanceOf[Long] || v.isInstanceOf[Int]) =>
-      Some(vs.toSeq.map {
-        case l: java.lang.Long => l.longValue
-        case i: java.lang.Integer => i.longValue
-      })
-    case _ => None
-  }
-
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    val (supported, residual) = filters.partition(f =>
-      termValues(f).isDefined || bucketValues(f).isDefined)
-    pushed = supported
-    // The filter array is a CONJUNCTION: each filter's value set is a
-    // constraint of its own, so the sets INTERSECT (term = 'a' AND
-    // term = 'b' matches nothing). Unioning here would return rows
-    // matching EITHER value — and since the filters are reported as
-    // fully pushed, Spark adds no post-scan filter to catch it.
-    val termSets = supported.flatMap(termValues(_).map(_.toSet))
-    if (termSets.nonEmpty) {
-      val ts = termSets.reduce(_ intersect _)
-      terms = Some(ts)
-      buckets = Some(ts.map(InvertedIndex.bucketOf(_, nBuckets)))
-    }
-    val bucketSets = supported.flatMap(bucketValues(_).map(_.toSet))
-    if (bucketSets.nonEmpty) {
-      val bs = bucketSets.reduce(_ intersect _)
-      buckets = Some(buckets.fold(bs)(_ intersect bs))
-    }
-    residual
-  }
-
-  override def pushedFilters(): Array[Filter] = pushed
-
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    required = requiredSchema
-
-  override def build(): Scan =
-    new PostingsScan(path, nBuckets, required, buckets, terms, pushed,
-      new SerializableHadoopConf(
-        SparkSession.active.sparkContext.hadoopConfiguration), roots)
-}
-
-private[graft] class PostingsScan(path: String, nBuckets: Int,
-    required: StructType, buckets: Option[Set[Long]],
-    terms: Option[Set[String]], pushed: Array[Filter],
-    hconf: SerializableHadoopConf, roots: Option[Set[String]] = None)
-    extends Scan with Batch
-    with SupportsRuntimeFiltering with SupportsReportStatistics {
-
-  /** Narrowed at execution time by [[filter]] (runtime / DPP-style
-    * filters injected from a join's build side). Dropping rows whose
-    * term is absent from the build side is always safe — the join
-    * would drop them anyway — so the runtime sets INTERSECT the
-    * compile-time ones. */
-  @volatile private var rtBuckets: Option[Set[Long]] = buckets
-  @volatile private var rtTerms: Option[Set[String]] = terms
-
-  /** Only attributes surviving column pruning may be offered —
-    * Spark resolves these against the scan OUTPUT when it wires the
-    * runtime-filter subquery. */
-  override def filterAttributes()
-      : Array[org.apache.spark.sql.connector.expressions.NamedReference] =
-    Seq("term", "bucket").filter(required.fieldNames.contains)
-      .map(org.apache.spark.sql.connector.expressions.Expressions.column)
-      .toArray
-
-  override def filter(filters: Array[Filter]): Unit = filters.foreach {
-    case In("term", vs) =>
-      val ts = vs.collect { case s: String => s }.toSet
-      rtTerms = Some(rtTerms.fold(ts)(_ intersect ts))
-      val bs = ts.map(InvertedIndex.bucketOf(_, nBuckets))
-      rtBuckets = Some(rtBuckets.fold(bs)(_ intersect bs))
-    case EqualTo("term", v: String) =>
-      rtTerms = Some(rtTerms.fold(Set(v))(_ intersect Set(v)))
-      val bs = Set(InvertedIndex.bucketOf(v, nBuckets))
-      rtBuckets = Some(rtBuckets.fold(bs)(_ intersect bs))
-    case In("bucket", vs) =>
-      val bs = vs.collect {
-        case l: java.lang.Long => l.longValue
-        case i: java.lang.Integer => i.longValue }.toSet
-      rtBuckets = Some(rtBuckets.fold(bs)(_ intersect bs))
-    case _ => () // runtime filters are best-effort; unknown = no-op
-  }
-
-  /** Driver-side pruned file listing: only the probed buckets'
-    * directories are listed at all. Computed per call so runtime
-    * filters applied between planning and execution take effect. */
-  private[graft] def files: Seq[(String, Long)] =
-    filesWithSizes.map { case (f, b, _) => (f, b) }
-
-  /** The pruned listing with file byte sizes — feeds both partition
-    * planning and [[estimateStatistics]]. Commit units (the effective
-    * base — root pre-compaction, newest `_base-<gen>` after — plus
-    * LIVE committed `_batch-<id>` directories, the
-    * [[graft.operators.TxBatch]] atomic-publish roots, hidden from
-    * plain parquet readers) are listed with the same bucket pruning. */
-  private def filesWithSizes: Seq[(String, Long, Long)] = {
-    val root = new Path(path)
-    val fs = root.getFileSystem(hconf.value)
-    // fold-tolerant: a concurrent TxBatch.compact sweeping a unit
-    // between the root listing and the per-unit listing retries once
-    // against a fresh listing instead of crashing the scan
-    CellsSource.foldTolerant(root, s"PostingsSource scan at $path") {
-      // `roots` bounds the listing to named commit units — the TxBatch
-      // protocol publishes whole unit directories atomically, so the
-      // allowlist is an exact file-set bound (the live consumers'
-      // offset-threading contract, symmetric across all three
-      // connectors), translated across compactions
-      val rootDirs = CellsSource.allowedUnits(fs, root, roots)
-      CellsSource.listingFailpoint()
-      rootDirs.flatMap { r =>
-        val sts = fs.listStatus(r).toSeq
-        CellsSource.requireUnitFresh(root, r, sts)
-        val dirs = sts
-          .filter(s => s.isDirectory && s.getPath.getName.startsWith("bucket="))
-          .map(s => (s.getPath, s.getPath.getName.stripPrefix("bucket=").toLong))
-        val kept = rtBuckets match {
-          case Some(bs) => dirs.filter { case (_, b) => bs.contains(b) }
-          case None => dirs
-        }
-        kept.flatMap { case (dir, b) =>
-          fs.listStatus(dir).toSeq
-            .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-            .map(f => (f.getPath.toString, b, f.getLen))
-        }
-      }
-    }
-  }
-
-  /** Statistics over the PRUNED listing — a term probe touching a few
-    * bucket files reports their byte size, so Catalyst's own
-    * autoBroadcastJoinThreshold can elect to broadcast the probe side
-    * of a join without a manual hint (row count left unknown;
-    * compressed bytes are the broadcast decision input). */
-  override def estimateStatistics(): Statistics = new Statistics {
-    private val bytes = filesWithSizes.map(_._3).sum
-    override def sizeInBytes(): java.util.OptionalLong =
-      java.util.OptionalLong.of(bytes)
-    override def numRows(): java.util.OptionalLong =
-      java.util.OptionalLong.empty()
-  }
-
-  override def readSchema(): StructType = required
-
-  override def description(): String =
-    s"GraftPostingsScan path=$path nBuckets=$nBuckets " +
-      s"buckets=${rtBuckets.map(_.toSeq.sorted.mkString("{", ",", "}"))
-        .getOrElse("ALL")} roots=${roots
-        .map(_.toSeq.sorted.mkString("{", ",", "}"))
-        .getOrElse("ALL")} files=${files.size} " +
-      s"PushedFilters: [${pushed.mkString(", ")}]"
-
-  override def toBatch: Batch = this
-
-  /** The layout as a micro-batch STREAM of its own appends: each
-    * trigger delivers exactly the parquet files that appeared since
-    * the last committed offset (the appendPostings / DSv2-write
-    * maintenance contract adds files, never rewrites) — the live feed
-    * a downstream incremental consumer (streaming stats maintenance,
-    * band appends) tails instead of re-scanning the index. Offsets are
-    * the set of files seen; compile-time term/bucket pruning applies
-    * to the discovery listing exactly as to a batch scan. */
-  override def toMicroBatchStream(
-      checkpointLocation: String): org.apache.spark.sql.connector.read
-        .streaming.MicroBatchStream =
-    new PostingsMicroBatchStream(this, path, required.fieldNames,
-      rtTerms, hconf)
-
-  override def planInputPartitions(): Array[InputPartition] =
-    files.map { case (f, b) =>
-      PostingsInputPartition(f, b): InputPartition }.toArray
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new PostingsReaderFactory(required.fieldNames, rtTerms, hconf)
-}
-
-/** Offset = the set of layout files already delivered, serialized as
-  * ONE LINE of compact JSON (a sorted array of paths). Spark's
-  * OffsetSeqLog stores one offset per line of the checkpoint offset
-  * log, so a multi-line `json()` corrupts the log the moment an offset
-  * covers ≥ 2 files (the first micro-batch delivers the whole layout)
-  * — restart-from-checkpoint would then fail or replay. Jackson does
-  * the quoting, so arbitrary path characters round-trip. (A production
-  * source would log manifests instead of enumerating, the
-  * FileStreamSource trade.) */
-private[sources] case class PostingsOffset(files: Set[String])
-    extends org.apache.spark.sql.connector.read.streaming.Offset {
-  override def json(): String =
-    PostingsOffset.mapper.writeValueAsString(files.toSeq.sorted.toArray)
-}
-
-private[sources] object PostingsOffset {
-  private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-
-  def fromJson(json: String): PostingsOffset = {
-    val t = json.trim
-    if (t.startsWith("["))
-      PostingsOffset(mapper.readValue(t, classOf[Array[String]]).toSet)
-    else
-      // legacy newline format: only ever valid when the committed
-      // offset held ≤ 1 file (multi-file offsets never round-tripped)
-      PostingsOffset(t.split("\n").filter(_.nonEmpty).toSet)
-  }
-}
-
-private[sources] class PostingsMicroBatchStream(scan: PostingsScan,
-    path: String, cols: Array[String], terms: Option[Set[String]],
-    hconf: SerializableHadoopConf)
-    extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream {
-  import org.apache.spark.sql.connector.read.streaming.Offset
-
-  override def initialOffset(): Offset = PostingsOffset(Set.empty)
-
-  override def latestOffset(): Offset =
-    PostingsOffset(scan.files.map(_._1).toSet)
-
-  override def deserializeOffset(json: String): Offset =
-    PostingsOffset.fromJson(json)
-
-  override def planInputPartitions(start: Offset,
-      end: Offset): Array[InputPartition] = {
-    val seen0 = start.asInstanceOf[PostingsOffset].files
-    val now = end.asInstanceOf[PostingsOffset].files
-    // compaction-survival: translate the committed offset through
-    // the fold history (see BandsMicroBatchStream)
-    val root = new Path(path)
-    val seen = graft.operators.TxBatch.translateOffsetFiles(
-      root.getFileSystem(hconf.value), root, seen0, now,
-      s"PostingsSource stream at $path")
-    (now -- seen).toSeq.sorted.map { f =>
-      val bucket = new Path(f).getParent.getName
-        .stripPrefix("bucket=").toLong
-      PostingsInputPartition(f, bucket): InputPartition
-    }.toArray
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new PostingsReaderFactory(cols, terms, hconf)
-
-  override def commit(end: Offset): Unit = ()
-  override def stop(): Unit = ()
-}
-
-private[sources] case class PostingsInputPartition(file: String,
-    bucket: Long) extends InputPartition
-
-private[sources] class PostingsReaderFactory(cols: Array[String],
-    terms: Option[Set[String]], hconf: SerializableHadoopConf)
-    extends PartitionReaderFactory {
-  override def createReader(
-      partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[PostingsInputPartition]
-    new PostingsPartitionReader(p.file, p.bucket, cols, terms, hconf)
-  }
-}
-
-/** DSv2 APPEND write path — the index-maintenance contract of the
-  * layout ([[graft.operators.InvertedIndex.appendPostings]]) exposed
-  * through the connector: bucket directories gain files, nothing is
-  * rewritten. Each task keeps one open parquet writer per bucket it
-  * sees (≤ nBuckets), writes uniquely-named files under the job's
-  * hidden staging root, and reports them in its commit message; the
-  * job commit publishes them into the bucket directories (see
-  * [[PostingsBatchWrite]]), a task or job abort deletes the staged
-  * files. The `bucket` column of each incoming row
-  * is VERIFIED against the layout hash of its term — a mis-bucketed
-  * posting would silently vanish from every pruned probe, so it is an
-  * error, not a trust.
-  *
-  * The one-row `.stats` relation rides OUTSIDE this writer (it is a
-  * different relation, not a postings row) — callers append it as
-  * [[graft.operators.InvertedIndex.appendPostings]] does; `bm25`
-  * merges the stats rows at read time. */
-private[graft] class PostingsWriteBuilder(path: String, nBuckets: Int,
-    input: StructType, hconf: SerializableHadoopConf)
-    extends org.apache.spark.sql.connector.write.WriteBuilder {
-  import org.apache.spark.sql.connector.write._
-  override def build(): Write = new Write {
-    override def toBatch: BatchWrite =
-      new PostingsBatchWrite(path, nBuckets, input, hconf)
-    override def toStreaming: streaming.StreamingWrite = {
-      val streamRoot = new Path(path, ".staging-stream-" +
-        java.util.UUID.randomUUID().toString.take(12)).toString
-      new LayoutStreamingWrite(path, hconf,
-        new PostingsStreamingWriterFactory(streamRoot, nBuckets,
-          input, hconf), streamRoot,
-        { case PostingsCommit(fs) => fs; case _ => Seq.empty })
-    }
-  }
-}
-
-/** Streaming twin of [[PostingsWriterFactory]]: the same per-row
-  * enforcing [[PostingsDataWriter]], staged under the epoch's own
-  * subdirectory (epoch id ≡ the TxBatch batch id the commit
-  * publishes). */
-private[sources] class PostingsStreamingWriterFactory(
-    streamRoot: String, nBuckets: Int, input: StructType,
-    hconf: SerializableHadoopConf)
-    extends org.apache.spark.sql.connector.write.streaming
-      .StreamingDataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long,
-      epochId: Long)
-      : org.apache.spark.sql.connector.write.DataWriter[InternalRow] =
-    new PostingsDataWriter(s"$streamRoot/$epochId", nBuckets, input,
-      hconf, partitionId, taskId)
-}
-
-/** Per-task commit message: bucket-relative staged file names
-  * (`bucket=N/part-...`), resolved against the job's staging root. */
-private[sources] case class PostingsCommit(files: Seq[String])
-    extends org.apache.spark.sql.connector.write.WriterCommitMessage
-
-/** Staged-rename batch write: every task writes its files under a
-  * job-unique hidden staging root (`.staging-<id>/bucket=N/…`), which
-  * readers never list (the scan lists only `bucket=*` root dirs;
-  * parquet listings skip dot-paths). [[commit]] moves the committed
-  * tasks' files into the bucket directories — so a driver failure
-  * BEFORE commit leaves nothing visible, closing the window a
-  * write-in-place scheme has (some tasks committed, job abort never
-  * ran ⇒ a half batch permanently visible). The residual envelope is
-  * a crash MID-commit (some renames applied): strictly smaller, and
-  * repairable — the leftover `.staging-*` directory is the detection
-  * marker, and re-running the append restores the intent. */
-private[sources] class PostingsBatchWrite(path: String, nBuckets: Int,
-    input: StructType, hconf: SerializableHadoopConf)
-    extends org.apache.spark.sql.connector.write.BatchWrite {
-  import org.apache.spark.sql.connector.write._
-
-  private val stagingRoot = new Path(path,
-    ".staging-" + java.util.UUID.randomUUID().toString.take(12)).toString
-
-  override def createBatchWriterFactory(
-      info: PhysicalWriteInfo): DataWriterFactory =
-    new PostingsWriterFactory(stagingRoot, nBuckets, input, hconf)
-
-  /** Publish: rename each committed task's staged files into their
-    * bucket directories, then drop the staging root. */
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val fs = new Path(path).getFileSystem(hconf.value)
-    messages.foreach {
-      case PostingsCommit(rels) => rels.foreach { rel =>
-        val dst = new Path(path, rel)
-        fs.mkdirs(dst.getParent)
-        if (!fs.rename(new Path(stagingRoot, rel), dst))
-          throw new java.io.IOException(
-            s"PostingsSource commit: rename of staged $rel failed")
-      }
+  /** A stamped layout carries its own nBuckets (`_graft_meta.json`) —
+    * an explicit option must AGREE with it; stamp-less legacy layouts
+    * fall back to option-or-64. */
+  private[sources] def open(spark: SparkSession, path: String,
+      opt: String => Option[String], schema: StructType): Layout = {
+    val stamped = InvertedIndex.readStampedBuckets(spark, path)
+    val opted = opt("nbuckets").orElse(opt("nBuckets")).map(_.toInt)
+    (stamped, opted) match {
+      case (Some(sn), Some(on)) => require(sn == on,
+        s"term-layout geometry mismatch at $path: layout is stamped " +
+          s"nBuckets=$sn, option asked for nBuckets=$on — a wrong " +
+          "bucket count silently prunes the wrong directories")
       case _ => ()
     }
-    fs.delete(new Path(stagingRoot), true)
-  }
-
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val fs = new Path(path).getFileSystem(hconf.value)
-    fs.delete(new Path(stagingRoot), true)
+    PostingsLayout(stamped.orElse(opted).getOrElse(64))
   }
 }
 
-private[sources] class PostingsWriterFactory(stagingRoot: String,
-    nBuckets: Int, input: StructType, hconf: SerializableHadoopConf)
-    extends org.apache.spark.sql.connector.write.DataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long)
-      : org.apache.spark.sql.connector.write.DataWriter[InternalRow] =
-    new PostingsDataWriter(stagingRoot, nBuckets, input, hconf,
-      partitionId, taskId)
-}
+/** The term layout: `bucket = pmod(fnv1a(term), nBuckets)`. A written
+  * row's `bucket` is VERIFIED against the hash of its term — a
+  * mis-bucketed posting would silently vanish from every pruned
+  * probe. */
+private[sources] case class PostingsLayout(nBuckets: Int) extends Layout {
+  def name: String = "postings"
+  def partCol: String = "bucket"
+  def schema: StructType = PostingsSource.Schema
+  override def keyCol: Option[String] = Some("term")
+  override def partitionOf(term: Any): Long =
+    InvertedIndex.bucketOf(term.asInstanceOf[String], nBuckets)
+  def describe: String = s"nBuckets=$nBuckets"
+  def properties(path: String): Seq[(String, String)] =
+    Seq("nBuckets" -> nBuckets.toString)
 
-private[sources] class PostingsDataWriter(stagingRoot: String,
-    nBuckets: Int, input: StructType, hconf: SerializableHadoopConf,
-    partitionId: Int, taskId: Long)
-    extends org.apache.spark.sql.connector.write.DataWriter[InternalRow] {
-  import org.apache.parquet.example.data.Group
-  import org.apache.parquet.hadoop.ParquetWriter
-  import org.apache.parquet.hadoop.example.ExampleParquetWriter
-  import org.apache.parquet.schema.MessageTypeParser
-
-  private val fileType = MessageTypeParser.parseMessageType(
-    """message postings {
-      |  required binary term (UTF8);
-      |  required int64 doc_id;
-      |  required int64 dl;
-      |  required int64 tf;
-      |}""".stripMargin)
-  private val factory =
-    new org.apache.parquet.example.data.simple.SimpleGroupFactory(fileType)
-
-  private val iTerm = input.fieldIndex("term")
-  private val iDoc = input.fieldIndex("doc_id")
-  private val iDl = input.fieldIndex("dl")
-  private val iTf = input.fieldIndex("tf")
-  private val iBucket = input.fieldIndex("bucket")
-
-  private val open =
-    scala.collection.mutable.Map.empty[Long, ParquetWriter[Group]]
-  /** bucket-relative staged names, echoed in the commit message */
-  private val files = scala.collection.mutable.ArrayBuffer.empty[String]
-
-  private def writerFor(bucket: Long): ParquetWriter[Group] =
-    open.getOrElseUpdate(bucket, {
-      val rel = s"bucket=$bucket/part-$partitionId-$taskId-" +
-        java.util.UUID.randomUUID().toString.take(8) + ".parquet"
-      files += rel
-      ExampleParquetWriter.builder(new Path(stagingRoot, rel))
-        .withType(fileType).withConf(hconf.value).build()
-    })
-
-  override def write(r: InternalRow): Unit = {
-    val term = r.getUTF8String(iTerm).toString
-    val bucket = r.getLong(iBucket)
-    val want = InvertedIndex.bucketOf(term, nBuckets)
-    if (bucket != want) throw new IllegalArgumentException(
-      s"PostingsSource write: row ('$term', bucket=$bucket) does not " +
-        s"match the layout hash bucket $want for nBuckets=$nBuckets — " +
-        "a mis-bucketed posting silently vanishes from pruned probes")
-    val g = factory.newGroup()
-    g.append("term", term)
-    g.append("doc_id", r.getLong(iDoc))
-    g.append("dl", r.getLong(iDl))
-    g.append("tf", r.getLong(iTf))
-    writerFor(bucket).write(g)
-  }
-
-  override def commit()
-      : org.apache.spark.sql.connector.write.WriterCommitMessage = {
-    open.values.foreach(_.close())
-    PostingsCommit(files.toSeq)
-  }
-
-  override def abort(): Unit = {
-    open.values.foreach(w => scala.util.Try(w.close()))
-    val fs = new Path(stagingRoot).getFileSystem(hconf.value)
-    files.foreach(f => fs.delete(new Path(stagingRoot, f), false))
-  }
-
-  override def close(): Unit = ()
-}
-
-/** Row-group reader over one postings data file: parquet-hadoop Group
-  * API, the pushed term set re-checked per row (pushed filters are
-  * accepted, not advisory), required columns only. */
-private[sources] class PostingsPartitionReader(file: String,
-    bucket: Long, cols: Array[String], terms: Option[Set[String]],
-    hconf: SerializableHadoopConf)
-    extends PartitionReader[InternalRow] {
-
-  private val reader = org.apache.parquet.hadoop.ParquetReader
-    .builder(new org.apache.parquet.hadoop.example.GroupReadSupport(),
-      new Path(file))
-    .withConf(hconf.value)
-    .build()
-
-  private var current: org.apache.parquet.example.data.Group = _
-
-  override def next(): Boolean = {
-    var g = reader.read()
-    while (g != null && terms.exists(ts => !ts(g.getString("term", 0))))
-      g = reader.read()
-    current = g
-    g != null
-  }
-
-  override def get(): InternalRow = {
-    val vals = cols.map {
-      case "term" => UTF8String.fromString(current.getString("term", 0))
-      case "doc_id" => current.getLong("doc_id", 0)
-      case "dl" => current.getLong("dl", 0)
-      case "tf" => current.getLong("tf", 0)
-      case "bucket" => bucket
-      case other => throw new IllegalArgumentException(
-        s"unknown postings column $other")
+  def rowCheck(input: StructType): (InternalRow, Long) => Unit = {
+    val iTerm = input.fieldIndex("term")
+    (r, bucket) => {
+      val term = r.getUTF8String(iTerm).toString
+      val want = InvertedIndex.bucketOf(term, nBuckets)
+      if (bucket != want) throw new IllegalArgumentException(
+        s"PostingsSource write: row ('$term', bucket=$bucket) does not " +
+          s"match the layout hash bucket $want for nBuckets=$nBuckets — " +
+          "a mis-bucketed posting silently vanishes from pruned probes")
     }
-    new GenericInternalRow(vals.asInstanceOf[Array[Any]])
   }
-
-  override def close(): Unit = reader.close()
 }

@@ -39,7 +39,7 @@ private[streaming] object StreamMaintenance {
 
   private def fnfCaused(t: Throwable): Boolean =
     t != null &&
-      (graft.sources.CellsSource.foldSweepRace(t) || fnfCaused(t.getCause))
+      (graft.sources.LayoutSource.foldSweepRace(t) || fnfCaused(t.getCause))
 
   /** Run one trigger's probe-and-publish fold-tolerantly — the
     * EXECUTION-window twin of the connectors' fold-tolerant listings:

@@ -98,7 +98,7 @@ object StreamOffsets {
             s"hidden directory $n, which is not a commit unit " +
             "(_batch-/_base-) nor a plain layout root — refusing " +
             "to guess")
-        graft.sources.CellsSource.BaseRoot
+        graft.sources.LayoutSource.BaseRoot
       }
     }
 

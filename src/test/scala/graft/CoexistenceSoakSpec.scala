@@ -294,6 +294,7 @@ class CoexistenceSoakSpec extends SparkSuite {
     }
     run("layout_twin", "pairs_twin", "ckpt_twin", fold = false)
     run("layout", "pairs", "ckpt", fold = true)
+    info(s"consumer restarts: $restarts")
     def pairsOf(p: String) = BandStreams.readPairs(spark, s"$base/$p")
       .select($"batch_doc", $"corpus_doc")
       .collect().map(r => (r.getLong(0), r.getLong(1)))
