@@ -29,10 +29,13 @@ import org.apache.spark.sql.functions._
   * work than the old sort-then-aggregate double, and that conf is the
   * tuning knob if the fallback ever shows up in profiles):
   *
-  *  1. the membership rows shuffle ONCE (`repartition(bucketCols)`);
-  *     every pass below reads that same exchange via Spark's exchange
-  *     reuse, so the expensive upstream (shingle hashing, signatures)
-  *     computes exactly once;
+  *  1. the membership rows with non-null bucket keys shuffle ONCE
+  *     (`repartition(bucketCols)`); every pass below reads that same
+  *     exchange via Spark's exchange reuse, so the expensive upstream
+  *     (shingle hashing, signatures, layout scans) computes exactly
+  *     once — provided the input's leaves canonicalize equal across
+  *     plan arms (a DSv2 source's leaf does so only through its
+  *     `Scan`'s equality, see [[graft.sources.LayoutScan]]);
   *  2. a single `bounded_min_set` pass ([[graft.functions.BoundedMinSetAgg]])
   *     returns each bucket's EXACT size plus its `bucketCap` smallest
   *     members — per-group aggregation memory is capped at `bucketCap`
@@ -83,8 +86,16 @@ object CandidatePairs extends Logging {
     val bCols: Seq[Column] = bucketCols.map(col)
     val id = col(idCol)
 
-    // The one exchange. Everything below reads it (exchange reuse).
-    val shuffled = bucketed.repartition(bCols: _*)
+    // The one exchange. Everything below reads it through exchange
+    // reuse, which holds only if every arm's copy of this subtree
+    // canonicalizes equal — down to the leaves (a DSv2 source's leaf is
+    // equal only through its Scan's equality). The join arms of the hot
+    // path infer `isnotnull` on the bucket columns and Spark pushes it
+    // under the repartition; spelled here, it is the same in every arm.
+    // So a null bucket key never pairs, on either path: it names no
+    // bucket, as in the hot path's joins and in fromBucketsMinTagged.
+    val shuffled = bucketed.filter(bCols.map(_.isNotNull).reduce(_ && _))
+      .repartition(bCols: _*)
 
     // Exact size + complete-if-bounded membership in ONE bounded pass.
     val agg = shuffled
@@ -102,21 +113,25 @@ object CandidatePairs extends Logging {
 
     // Hot path: recover full membership by re-keying the SAME exchange
     // against the hot keys. Both join children already satisfy the
-    // bucket-key distribution (the reused exchange, and the count
+    // bucket-key distribution (the reused exchange, and the size
     // aggregate above it), so the SHUFFLE_HASH hint plans a
     // zero-exchange shuffled-hash join with the hot keys as the local
     // build side: no broadcast collect (the hot-key count may itself
     // be unbounded under pervasive skew — up to N/cap keys), no sort
     // of the membership side, and the common no-hot-bucket case pays
-    // one cheap codegen count-agg plus an empty per-partition hash map.
-    // count(id), not count(*): the same non-null-id measure as
-    // bounded_min_set's cnt above, so a bucket is EITHER small or hot,
-    // never both (null-id membership rows can't pair and must not
-    // inflate one predicate but not the other — with mismatched
-    // measures a null-heavy bucket would run down both paths and
-    // regenerate every pair twice before the distinct)
+    // one cap-1 size aggregate plus an empty per-partition hash map.
+    // The size is bounded_min_set's own cnt, the non-null-id measure of
+    // `agg` above, so a bucket is EITHER small or hot, never both
+    // (null-id membership rows can't pair and must not inflate one
+    // predicate but not the other — with mismatched measures a
+    // null-heavy bucket would run down both paths and regenerate every
+    // pair twice before the distinct). It also keeps this arm reading
+    // the id column like every other arm: count(id) over a non-nullable
+    // id folds to count(1), the id is pruned below the repartition, and
+    // this arm's exchange would no longer be the one the others reuse.
     val hotKeys = shuffled.groupBy(bCols: _*)
-      .agg(count(id).as("__m"))
+      .agg(F.bounded_min_set(id, 1).as("__s"))
+      .select(bCols :+ col("__s.cnt").as("__m"): _*)
       .filter(col("__m") > bucketCap)
     val chunked = shuffled.join(hotKeys.hint("shuffle_hash"), bucketCols)
       .withColumn("__nc", ceil(col("__m") / lit(bucketCap.toLong)).cast("int"))
@@ -162,7 +177,11 @@ object CandidatePairs extends Logging {
     val bCols: Seq[Column] = bucketCols.map(col)
     val id = col(idCol)
 
-    val shuffled = bucketed.repartition(bCols: _*)
+    // The one exchange, null bucket keys dropped as in fromBuckets so
+    // the join arms' inferred `isnotnull` does not set them apart (no
+    // change in pairs: every arm below inner-joins on the bucket keys).
+    val shuffled = bucketed.filter(bCols.map(_.isNotNull).reduce(_ && _))
+      .repartition(bCols: _*)
     val sizes = shuffled.groupBy(bCols: _*)
       .agg(count(id).as("__m"))
       .filter(col("__m") > 1)

@@ -5,6 +5,7 @@ import graft.functions.{GraftFunctions => F}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Inverted-index layout for keyword search — the scale path behind
   * `bm25_search`: the brute query scores the whole corpus every time;
@@ -178,10 +179,17 @@ object InvertedIndex {
       .foldLeft(spark.read.parquet(TxBatch.baseDir(spark, path)))(
         (acc, b) => acc.unionByName(spark.read.parquet(b)))
 
+  /** The schema of every stats root: what [[writeTermLayout]]'s
+    * callers, [[appendPostings]], [[appendPostingsIdempotent]] and
+    * [[compact]] write. */
+  private val StatsSchema: StructType = StructType(Seq(
+    StructField("n_docs", LongType), StructField("sum_dl", LongType)))
+
   /** Merged corpus stats: the base stats relation (the sibling
     * `.stats` root pre-compaction; the `_stats` folded inside the
     * base generation after [[compact]]) plus each LIVE batch's staged
-    * stats row. */
+    * stats row. Each root is read with [[StatsSchema]]: a read that
+    * infers the schema runs one Spark job per root to read a footer. */
   def readStats(spark: SparkSession, path: String): DataFrame = {
     // gen-0 vs compacted resolves through compactedBaseDir, never by
     // comparing the normalized base string against the raw caller
@@ -189,9 +197,9 @@ object InvertedIndex {
     val baseStats = TxBatch.compactedBaseDir(spark, path)
       .map(_ + "/" + TxBatch.StatsDir)
       .getOrElse(path.stripSuffix("/") + ".stats")
+    def read(d: String) = spark.read.schema(StatsSchema).parquet(d)
     TxBatch.liveBatchDirs(spark, path).map(_ + "/" + TxBatch.StatsDir)
-      .foldLeft(spark.read.parquet(baseStats))((acc, d) =>
-        acc.unionByName(spark.read.parquet(d)))
+      .foldLeft(read(baseStats))((acc, d) => acc.unionByName(read(d)))
   }
 
   /** Fold the base and every committed batch into one new base

@@ -561,11 +561,14 @@ private[queries] trait PipelineCore {
     // Candidate pairs via skew-proof per-bucket grouping
     // (CandidatePairs.fromBuckets — ONE signature pass; exchange reuse
     // keeps the signature pipeline from re-running for the hot-bucket
-    // self-join branch). Exact duplicates are normally collapsed by
-    // exact_dedup (L1) first, which keeps buckets small — but a hot
-    // template cluster no longer needs that precondition for the plan
-    // to survive: buckets past `bucketCap` are hash-chunked so pair
-    // generation distributes instead of landing on one reducer.
+    // self-join branch — as long as every arm's copy of `bucketed`
+    // canonicalizes equal down to its leaves: file and RDD leaves do, a
+    // DSv2 leaf only through its Scan's equality). Exact duplicates
+    // are normally collapsed by exact_dedup (L1) first, which keeps
+    // buckets small — but a hot template cluster no longer needs that
+    // precondition for the plan to survive: buckets past `bucketCap`
+    // are hash-chunked so pair generation distributes instead of
+    // landing on one reducer.
     val cand = graft.operators.CandidatePairs.fromBuckets(bucketed,
       Seq("band_no", "band_hash"), "doc_id", "doc_a", "doc_b", bucketCap)
     // Exact string-level Jaccard verify — shingle strings are built

@@ -353,10 +353,28 @@ private[graft] class LayoutScanBuilder(path: String, layout: Layout,
 
 /** The layout scan: a pruned file listing (one InputPartition per
   * data file), statistics over it, runtime narrowing and the
-  * micro-batch stream of the layout's own appends. */
-private[graft] class LayoutScan(path: String, layout: Layout,
-    required: StructType, pushed: Array[Filter],
-    hconf: SerializableHadoopConf, roots: Option[Set[String]])
+  * micro-batch stream of the layout's own appends.
+  *
+  * Value equality: Spark's `BatchScanExec.equals` compares the scans'
+  * `Batch` objects, and this scan is its own batch, so two reads of
+  * one layout canonicalize equal — and `ReuseExchange` and AQE's
+  * stage cache share their exchange — only if the scans are equal, so
+  * an operator that reads one DataFrame in several plan arms
+  * ([[graft.operators.CandidatePairs.fromBuckets]]) scans the layout
+  * once, not once per arm. Two scans are equal when they
+  * read the same rows: the same `path`, [[Layout]] (a case class:
+  * geometry and schema), pruned `required` schema, `roots` allowlist
+  * and narrowed partition and key sets — the pushed filters are
+  * captured exactly by those sets, so their order is not compared, and
+  * `hconf` is not compared. `hashCode` leaves the two sets out: a
+  * runtime [[filter]] narrows them in place after the scan may already
+  * sit in a hash map, and a hash must not change under it. Reuse never
+  * crosses queries: each query plans its own scans and lists the
+  * layout when it runs. */
+private[graft] class LayoutScan(private val path: String,
+    private val layout: Layout, private val required: StructType,
+    pushed: Array[Filter], hconf: SerializableHadoopConf,
+    private val roots: Option[Set[String]])
     extends Scan with Batch
     with SupportsRuntimeFiltering with SupportsReportStatistics {
 
@@ -394,6 +412,15 @@ private[graft] class LayoutScan(path: String, layout: Layout,
       .map(Expressions.column).toArray
 
   override def filter(filters: Array[Filter]): Unit = narrow(filters)
+
+  override def equals(other: Any): Boolean = other match {
+    case o: LayoutScan => path == o.path && layout == o.layout &&
+      required == o.required && roots == o.roots &&
+      parts == o.parts && keys == o.keys
+    case _ => false
+  }
+
+  override def hashCode(): Int = (path, layout, required, roots).##
 
   /** Driver-side pruned listing `(file, partition, bytes)`: only the
     * kept partitions' directories are listed at all. Computed per call

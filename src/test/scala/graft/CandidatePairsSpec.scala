@@ -127,6 +127,34 @@ class CandidatePairsSpec extends SparkSuite {
     assert(hot == 0L)
   }
 
+  test("null bucket keys never pair, on the grouped and chunked paths " +
+      "alike") {
+    // bucket (0, null) holds 11..15, bucket (0, 7) holds 1..5: only
+    // the keyed bucket's pairs come out, whichever path each takes
+    val ids = 1L to 5L
+    val rows = ids.map(id => (0, Option.empty[Long], id + 10)) ++
+      ids.map(id => (0, Option(7L), id))
+    val df = rows.toDF("band_no", "band_key", "id")
+    val want = (for (a <- ids; b <- ids if a < b) yield (a, b)).toSet
+    Seq(16, 2).foreach { cap =>
+      val got = CandidatePairs.fromBuckets(df, Seq("band_no", "band_key"),
+        "id", "id_a", "id_b", cap)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      val tagged = CandidatePairs.fromBucketsMinTagged(
+        df.withColumn("ord", $"band_no"), Seq("band_no", "band_key"), "id",
+        Seq("ord"), Seq.empty, "id_a", "id_b", cap)
+        .collect().map(r => (r.getAs[Long]("id_a"), r.getAs[Long]("id_b")))
+        .toSet
+      assert(got == want && tagged == want,
+        s"cap=$cap: null-key pairs leaked or keyed pairs lost: $got")
+    }
+    // one key column null is enough to name no bucket
+    val halfNull = Seq((Option.empty[Int], 7L, 1L), (Option.empty[Int], 7L, 2L))
+      .toDF("band_no", "band_key", "id")
+    assert(CandidatePairs.fromBuckets(halfNull, Seq("band_no", "band_key"),
+      "id", "id_a", "id_b", 16).isEmpty)
+  }
+
   test("pair budget caps output deterministically with an exact drop ledger") {
     // bucket A: 6 members → C(6,2)=15 pairs; bucket B: 3 → 3; C: 2 → 1.
     val rows =
