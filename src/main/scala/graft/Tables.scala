@@ -13,8 +13,12 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def apply(spark: SparkSession, dir: String, name: String): DataFrame =
+  /** The engine's first touch of a session: sizes the codegen cache
+    * before any code is generated ([[Graft]]). */
+  def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
+    Graft.sizeCodegenCache(spark)
     spark.read.parquet(s"$dir/$name.parquet")
+  }
 
   def lineitem(s: SparkSession, d: String): DataFrame   = apply(s, d, "lineitem")
   def orders(s: SparkSession, d: String): DataFrame     = apply(s, d, "orders")

@@ -198,9 +198,12 @@ object BandIndex {
   /** Fold the base and every committed batch into one new base
     * generation ([[TxBatch.compact]]) — content-preserving, one
     * atomic rename, replayed batch ids stay no-ops. Quiesce any
-    * tailing stream consumer first (file identity changes). */
+    * tailing stream consumer first (file identity changes). Every
+    * commit unit is read with the layout's declared schema, so the
+    * fold runs no schema-inference job. */
   def compact(spark: SparkSession, path: String): Boolean =
-    TxBatch.compact(spark, path, "bucket")
+    TxBatch.compact(spark, path, "bucket",
+      schema = Some(graft.sources.BandsSource.Schema))
 
   /** Candidate (batch_doc, corpus_doc) pairs of a new batch against
     * the persisted index — the `incremental_neardup` probe over the

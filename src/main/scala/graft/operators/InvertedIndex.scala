@@ -209,10 +209,11 @@ object InvertedIndex {
     * sibling root is only the gen-0 convention. A tailing stream
     * consumer that has processed every committed batch survives via
     * offset translation; otherwise its next trigger refuses loudly
-    * (TxBatch object doc). */
+    * (TxBatch object doc). Every commit unit is read with the layout's
+    * declared schema, so the fold runs no schema-inference job. */
   def compact(spark: SparkSession, path: String): Boolean =
-    TxBatch.compact(spark, path, "bucket",
-      Some(readStats(spark, path)))
+    TxBatch.compact(spark, path, "bucket", Some(readStats(spark, path)),
+      schema = Some(graft.sources.PostingsSource.Schema))
 
   /** Postings of exactly `terms`, reading ONLY their buckets: the
     * literal bucket IN-filter prunes unprobed directories at listing

@@ -94,7 +94,8 @@ object BandStreams {
           ()
         }
         StreamMaintenance.postTrigger(arriving.sparkSession,
-          layoutPath, "bucket", pairsPath, PairsSchema, checkpoint,
+          layoutPath, "bucket", Some(graft.sources.BandsSource.Schema),
+          pairsPath, PairsSchema, checkpoint,
           batchId.longValue, maintainLayoutEvery, maintainPairsEvery)
         ()
       }

@@ -94,7 +94,7 @@ object CellStreams {
           ()
         }
         StreamMaintenance.postTrigger(arriving.sparkSession,
-          layoutPath, "cell", pairsPath, PairsSchema, checkpoint,
+          layoutPath, "cell", None, pairsPath, PairsSchema, checkpoint,
           batchId.longValue, maintainLayoutEvery, maintainPairsEvery)
         ()
       }

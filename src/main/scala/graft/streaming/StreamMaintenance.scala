@@ -82,9 +82,13 @@ private[streaming] object StreamMaintenance {
     * folds the tailed source layout when ITS live count reaches the
     * threshold, restricted to the delivered ids. Zero disables the
     * corresponding fold (the default — quiesced external maintenance
-    * stays available through [[TxBatch.compact]]). */
+    * stays available through [[TxBatch.compact]]). The layout fold
+    * reads with `layoutSchema` when the layout declares one (bands),
+    * so it runs no schema-inference job; a cell layout's data schema
+    * is its builder's, so it is inferred. */
   def postTrigger(s: SparkSession, layoutPath: String,
-      layoutPartitionCol: String, pairsPath: String,
+      layoutPartitionCol: String, layoutSchema: Option[StructType],
+      pairsPath: String,
       pairsSchema: StructType, checkpoint: String, batchId: Long,
       maintainLayoutEvery: Int, maintainPairsEvery: Int): Unit = {
     if (maintainPairsEvery > 0)
@@ -104,7 +108,8 @@ private[streaming] object StreamMaintenance {
       if (ids.nonEmpty)
         TxBatch.maintainCompact(s, layoutPath,
           partitionCol = layoutPartitionCol,
-          maxLiveBatches = maintainLayoutEvery, onlyIds = Some(ids))
+          maxLiveBatches = maintainLayoutEvery, onlyIds = Some(ids),
+          schema = layoutSchema)
       ()
     }
   }

@@ -3,15 +3,10 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** One shared local SparkSession for all suites (startup is ~seconds). */
+/** One shared local SparkSession for all suites (startup is ~seconds),
+  * built by the engine's session builder. */
 object SparkTest {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Graft.session(4)
 }
 
 trait SparkSuite extends AnyFunSuite {

@@ -1,5 +1,5 @@
 package graft.tools
-import graft.{SparkEntry, Tables}
+import graft.{Graft, SparkEntry, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -19,11 +19,7 @@ object Scratch {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Graft.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     import spark.implicits._
 
     val base = Tables.documents(spark, sfDir)
