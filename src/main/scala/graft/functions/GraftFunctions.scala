@@ -1,6 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
 import org.apache.spark.sql.graftbridge.{Bridge => ExpressionUtils}
 
 /** Public Column API for the engine's custom functions (the Spark-4
@@ -190,59 +192,65 @@ object GraftFunctions {
         s"$what must be a literal int, got $other")
     }
     val r = spark.sessionState.functionRegistry
-    r.createOrReplaceTempFunction(
+    // a name the session already has is kept: re-registering replaces
+    // it and logs a WARN per function on every repeated call
+    def register(name: String, builder: FunctionRegistry.FunctionBuilder,
+        source: String): Unit =
+      if (!r.functionExists(FunctionIdentifier(name)))
+        r.createOrReplaceTempFunction(name, builder, source)
+    register(
       "fnv1a", exprs => Fnv1aHash(exprs, Fnv1aCore.OffsetBasis), "built-in")
-    r.createOrReplaceTempFunction(
+    register(
       "fnv1a_seeded", exprs => Fnv1aSeededHash(exprs), "built-in")
-    r.createOrReplaceTempFunction(
+    register(
       "dotd", { exprs =>
         require(exprs.length == 2, "dotd(a, b) takes two array<double>")
         DotProductD(exprs.head, exprs(1))
       }, "built-in")
-    r.createOrReplaceTempFunction(
+    register(
       "simhash64", { exprs =>
         require(exprs.length == 1, "simhash64(hashes) takes one array<bigint>")
         SimHash64(exprs.head)
       }, "built-in")
-    r.createOrReplaceTempFunction(
+    register(
       "byte_sum", { exprs =>
         require(exprs.length == 1, "byte_sum(b) takes one binary column")
         ByteSum(exprs.head)
       }, "built-in")
-    r.createOrReplaceTempFunction(
+    register(
       "ahash64", { exprs =>
         require(exprs.length == 1, "ahash64(b) takes one binary column")
         AHash64(exprs.head)
       }, "built-in")
-    r.createOrReplaceTempFunction(
+    register(
       "shingle_hash_set", { exprs =>
         require(exprs.length == 1, "shingle_hash_set(text) takes one column")
         ShingleHashSet(exprs.head)
       }, "built-in")
-    r.createOrReplaceTempFunction(
+    register(
       "shingle_hashes", { exprs =>
         require(exprs.length == 1, "shingle_hashes(text) takes one column")
         ShingleHashes(exprs.head)
       }, "built-in")
-    r.createOrReplaceTempFunction(
+    register(
       "bounded_min_set", { exprs =>
         require(exprs.length == 2, "bounded_min_set(id, cap)")
         BoundedMinSetAgg(exprs.head, intLit(exprs(1), "bounded_min_set cap"))
           .toAggregateExpression()
       }, "built-in")
-    r.createOrReplaceTempFunction(
+    register(
       "misra_gries", { exprs =>
         require(exprs.length == 2, "misra_gries(key, cap)")
         MisraGriesAgg(exprs.head, intLit(exprs(1), "misra_gries cap"))
           .toAggregateExpression()
       }, "built-in")
-    r.createOrReplaceTempFunction(
+    register(
       "gram_matrix", { exprs =>
         require(exprs.length == 2, "gram_matrix(vec, dim)")
         GramMatrixAgg(exprs.head, intLit(exprs(1), "gram_matrix dim"))
           .toAggregateExpression()
       }, "built-in")
-    r.createOrReplaceTempFunction(
+    register(
       "hilbert2", { exprs =>
         require(exprs.length == 3, "hilbert2(x, y, bits)")
         HilbertIndex2(exprs.head, exprs(1), intLit(exprs(2), "hilbert2 bits"))

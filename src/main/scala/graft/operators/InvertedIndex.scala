@@ -269,7 +269,6 @@ object InvertedIndex {
     // transactional batch) — merge at read time
     val stats = broadcast(statsRows
       .agg(sum($"n_docs").as("n_docs"), sum($"sum_dl").as("sum_dl")))
-    val dfreq = posts.groupBy($"term").agg(count(lit(1)).as("df"))
     val idf = log(($"n_docs".cast("double") - $"df".cast("double") +
       lit(0.5)) / ($"df".cast("double") + lit(0.5)) + lit(1.0))
     val tfn = ($"tf".cast("double") * lit(2.2)) /
@@ -277,8 +276,10 @@ object InvertedIndex {
         ($"dl".cast("double") /
           ($"sum_dl".cast("double") / $"n_docs".cast("double")))))
     val w = Window.partitionBy($"query_id").orderBy($"sq".desc, $"doc_id")
+    // df over the same relation, so the postings are scanned once: a
+    // `groupBy(term)` arm would read only `term`, a scan of its own
     posts
-      .join(broadcast(dfreq), "term")
+      .withColumn("df", count(lit(1)).over(Window.partitionBy($"term")))
       .crossJoin(stats)
       .join(broadcast(queries.toDF("query_id", "term")), "term")
       .select($"query_id", $"doc_id",

@@ -8,16 +8,21 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.{ParquetReader, ParquetWriter}
+import org.apache.parquet.hadoop.api.ReadSupport
 import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupReadSupport}
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference, Transform}
+import org.apache.spark.sql.connector.metric.{CustomMetric, CustomSumMetric, CustomTaskMetric}
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
 import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, Write, WriteBuilder, WriterCommitMessage}
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.sources.{EqualTo, Filter, In}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -351,9 +356,22 @@ private[graft] class LayoutScanBuilder(path: String, layout: Layout,
     pushed, SerializableHadoopConf.active(), roots)
 }
 
-/** The layout scan: a pruned file listing (one InputPartition per
-  * data file), statistics over it, runtime narrowing and the
-  * micro-batch stream of the layout's own appends.
+/** The layout scan: a pruned file listing, statistics over it, runtime
+  * narrowing and the micro-batch stream of the layout's own appends.
+  *
+  * Input partitions: a layout holds many small files (one per commit
+  * unit and partition directory, often a few KB), and one task per file
+  * costs far more to schedule than to read. The listed files are packed
+  * into multi-file [[LayoutInputPartition]]s by Spark's own file-source
+  * rule ([[LayoutScan.pack]]): `spark.sql.files.maxPartitionBytes`,
+  * `spark.sql.files.openCostInBytes` and `spark.sql.files.minPartitionNum`
+  * (default: the leaf-node default parallelism), so a read of a few KB
+  * runs about one task per core. The reader factory carries the
+  * session's Hadoop conf as ONE broadcast per [[createReaderFactory]],
+  * as Spark's own `ParquetScan` does, not a copy in every task, and
+  * [[LayoutPartitionReader]] opens each file through a
+  * `HadoopInputFile` of that conf. The `numFiles` driver metric
+  * reports the files a run planned, whatever the partition count.
   *
   * Value equality: Spark's `BatchScanExec.equals` compares the scans'
   * `Batch` objects, and this scan is its own batch, so two reads of
@@ -382,6 +400,9 @@ private[graft] class LayoutScan(private val path: String,
   @volatile private var parts: Option[Set[Long]] = None
   @volatile private var keys: Option[Set[Any]] = None
   narrow(pushed)
+
+  /** Files planned by the last batch or micro-batch planning. */
+  @volatile private var filesPlanned = 0L
 
   /** The filter array is a CONJUNCTION: each filter's value set is a
     * constraint of its own, so the sets INTERSECT (term = 'a' AND
@@ -479,32 +500,88 @@ private[graft] class LayoutScan(private val path: String,
     new LayoutMicroBatchStream(this)
 
   override def planInputPartitions(): Array[InputPartition] =
-    files.map { case (f, p, _) => LayoutInputPartition(f, p): InputPartition }
-      .toArray
+    planned(files)
 
   /** The partitions of the files in `now` not yet delivered by `seen`.
     * A compaction between triggers rewrote file identity: the
     * committed offset is translated through the fold history
     * (delivered units map onto the new base) instead of re-delivering
-    * the world — refusing loudly if the fold outran the consumer. */
-  private[sources] def newPartitions(seen: Set[String],
-      now: Set[String]): Array[InputPartition] = {
+    * the world — refusing loudly if the fold outran the consumer.
+    * `sizes` holds the byte sizes of the stream's latest listing; a
+    * file it does not know (a batch replayed from the offset log after
+    * a restart) is packed at size 0, i.e. by its open cost alone. */
+  private[sources] def newPartitions(seen: Set[String], now: Set[String],
+      sizes: Map[String, Long]): Array[InputPartition] = {
     val root = new Path(path)
     val delivered = graft.operators.TxBatch.translateOffsetFiles(
       root.getFileSystem(hconf.value), root, seen, now,
       s"${layout.source} stream at $path")
     val prefix = s"${layout.partCol}="
-    (now -- delivered).toSeq.sorted.map { f =>
-      val p = new Path(f).getParent.getName.stripPrefix(prefix).toLong
-      LayoutInputPartition(f, p): InputPartition
-    }.toArray
+    planned((now -- delivered).toSeq.sorted.map { f =>
+      (f, new Path(f).getParent.getName.stripPrefix(prefix).toLong,
+        sizes.getOrElse(f, 0L))
+    })
   }
 
+  private def planned(fs: Seq[(String, Long, Long)]): Array[InputPartition] = {
+    filesPlanned = fs.size
+    LayoutScan.pack(fs)
+  }
+
+  override def supportedCustomMetrics(): Array[CustomMetric] =
+    Array(new LayoutFilesMetric)
+
+  override def reportDriverMetrics(): Array[CustomTaskMetric] = {
+    val n = filesPlanned
+    Array(new CustomTaskMetric {
+      override def name(): String = LayoutFilesMetric.Name
+      override def value(): Long = n
+    })
+  }
+
+  /** Broadcasts a snapshot of the conf, as Spark's `ParquetScan` does:
+    * local-mode tasks read the broadcast value itself, so a live
+    * session conf would change under a running scan. */
   override def createReaderFactory(): PartitionReaderFactory =
-    new LayoutReaderFactory(layout, required, keys, hconf)
+    new LayoutReaderFactory(layout, required, keys,
+      SparkSession.active.sparkContext.broadcast(
+        new SerializableHadoopConf(new Configuration(hconf.value))))
 }
 
 private[sources] object LayoutScan {
+  /** Packs `(file, partition value, bytes)` into input partitions by
+    * the rule of Spark's `FilePartition.maxSplitBytes` and
+    * `getFilePartitions`: a split target of `min(maxPartitionBytes,
+    * max(openCost, total / minPartitionNum))`, where each file weighs
+    * its bytes plus the open cost, filled next-fit in the given
+    * (listing) order, so rows come back in the order one partition per
+    * file returned them. Files are never split: a file larger than the
+    * target is a partition of its own. */
+  def pack(files: Seq[(String, Long, Long)]): Array[InputPartition] = {
+    val conf = SQLConf.get
+    val openCost = conf.filesOpenCostInBytes
+    val minParts = conf.filesMinPartitionNum.getOrElse(
+      conf.getConf(SQLConf.LEAF_NODE_DEFAULT_PARALLELISM).getOrElse(
+        SparkSession.active.sparkContext.defaultParallelism))
+    val total = files.map(_._3 + openCost).sum
+    val target = math.min(conf.filesMaxPartitionBytes,
+      math.max(openCost, total / minParts))
+    val out = Array.newBuilder[InputPartition]
+    val current = Seq.newBuilder[(String, Long)]
+    var size = 0L
+    files.foreach { case (f, p, bytes) =>
+      if (size > 0 && size + bytes > target) {
+        out += LayoutInputPartition(current.result())
+        current.clear()
+        size = 0L
+      }
+      size += bytes + openCost
+      current += ((f, p))
+    }
+    if (size > 0) out += LayoutInputPartition(current.result())
+    out.result()
+  }
+
   /** The value set an EqualTo/In filter pins a partition or key column
     * to — Int or Long values as Long on integral columns, Strings on
     * string columns; None for any other filter. Pushdown and runtime
@@ -561,45 +638,64 @@ private[sources] object LayoutOffset {
 private[sources] class LayoutMicroBatchStream(scan: LayoutScan)
     extends MicroBatchStream {
   override def initialOffset(): Offset = LayoutOffset(Set.empty)
-  override def latestOffset(): Offset =
-    LayoutOffset(scan.files.map(_._1).toSet)
+  /** Byte sizes from the latest listing, for packing. */
+  @volatile private var sizes = Map.empty[String, Long]
+  override def latestOffset(): Offset = {
+    sizes = scan.files.map { case (f, _, bytes) => f -> bytes }.toMap
+    LayoutOffset(sizes.keySet)
+  }
   override def deserializeOffset(json: String): Offset =
     LayoutOffset.fromJson(json)
   override def planInputPartitions(start: Offset,
       end: Offset): Array[InputPartition] =
     scan.newPartitions(start.asInstanceOf[LayoutOffset].files,
-      end.asInstanceOf[LayoutOffset].files)
+      end.asInstanceOf[LayoutOffset].files, sizes)
   override def createReaderFactory(): PartitionReaderFactory =
     scan.createReaderFactory()
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
 }
 
-private[sources] case class LayoutInputPartition(file: String, part: Long)
+/** `(file, partition value)` of the files one task reads, in order. */
+private[graft] case class LayoutInputPartition(files: Seq[(String, Long)])
     extends InputPartition
+
+/** The `numFiles` driver metric: files a scan planned. */
+private[sources] class LayoutFilesMetric extends CustomSumMetric {
+  override def name(): String = LayoutFilesMetric.Name
+  override def description(): String = "number of files read"
+}
+
+private[sources] object LayoutFilesMetric {
+  val Name = "numFiles"
+}
 
 private[sources] class LayoutReaderFactory(layout: Layout,
     required: StructType, keys: Option[Set[Any]],
-    hconf: SerializableHadoopConf) extends PartitionReaderFactory {
+    hconf: Broadcast[SerializableHadoopConf]) extends PartitionReaderFactory {
   override def createReader(
-      partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[LayoutInputPartition]
-    new LayoutPartitionReader(p.file, p.part, layout, required, keys, hconf)
-  }
+      partition: InputPartition): PartitionReader[InternalRow] =
+    new LayoutPartitionReader(
+      partition.asInstanceOf[LayoutInputPartition].files, layout, required,
+      keys, hconf.value.value)
 }
 
-/** Row-group reader over one data file: parquet-hadoop Group API (a
-  * probe reads a few small files of the pruned partitions, where scan
-  * setup, not decode vectorization, dominates), the pushed key set
-  * re-checked per row, required columns only, the partition column
-  * filled from the directory value. */
-private[sources] class LayoutPartitionReader(file: String, part: Long,
+/** Reads a packed partition's files one after another: parquet-hadoop
+  * Group API (a probe reads a few small files of the pruned partitions,
+  * where scan setup, not decode vectorization, dominates), the pushed
+  * key set re-checked per row, required columns only, the partition
+  * column filled from each file's directory value. Each file opens
+  * through a [[HadoopInputFile]] of the scan's Hadoop conf:
+  * `ParquetReader.builder(readSupport, path)` builds a fresh
+  * `new Configuration()` per file (a parse of Hadoop's default XML
+  * resources) before `withConf` replaces it. */
+private[sources] class LayoutPartitionReader(files: Seq[(String, Long)],
     layout: Layout, required: StructType, keys: Option[Set[Any]],
-    hconf: SerializableHadoopConf) extends PartitionReader[InternalRow] {
+    conf: Configuration) extends PartitionReader[InternalRow] {
 
-  private val reader = ParquetReader
-    .builder(new GroupReadSupport(), new Path(file))
-    .withConf(hconf.value).build()
+  private val pending = files.iterator
+  private var reader: ParquetReader[Group] = _
+  private var part = 0L
 
   /** Key values in their Catalyst form, as the codec reads them. */
   private val keySet: Option[Set[Any]] = keys.map(_.map {
@@ -608,7 +704,7 @@ private[sources] class LayoutPartitionReader(file: String, part: Long,
   })
 
   private var current: Group = _
-  /** Field readers, resolved against the file's message type on the
+  /** Field readers, resolved against a file's message type on its
     * first row (every row group of one file shares it). */
   private var columns: Array[Group => Any] = _
   private var key: Group => Any = _
@@ -617,23 +713,49 @@ private[sources] class LayoutPartitionReader(file: String, part: Long,
     def field(name: String): Group => Any =
       ParquetRowCodec.reader(name, g.getType.getFieldIndex(name),
         layout.schema(name).dataType)
+    val p = part
     columns = required.fieldNames.map(n =>
-      if (n == layout.partCol) (_: Group) => part else field(n))
+      if (n == layout.partCol) (_: Group) => p else field(n))
     key = layout.keyCol.map(field).orNull
   }
 
+  /** Opens the next file; false when none is left. */
+  private def openNext(): Boolean = pending.hasNext && {
+    val (f, p) = pending.next()
+    reader = LayoutPartitionReader.open(f, conf)
+    part = p
+    columns = null
+    true
+  }
+
   override def next(): Boolean = {
-    var g = reader.read()
-    if (g != null && columns == null) resolve(g)
-    while (g != null && keySet.exists(ks => !ks(key(g)))) g = reader.read()
-    current = g
-    g != null
+    current = null
+    while (current == null && (reader != null || openNext())) {
+      var g = reader.read()
+      if (g != null && columns == null) resolve(g)
+      while (g != null && keySet.exists(ks => !ks(key(g)))) g = reader.read()
+      if (g == null) close() else current = g
+    }
+    current != null
   }
 
   override def get(): InternalRow =
     new GenericInternalRow(columns.map(_(current)))
 
-  override def close(): Unit = reader.close()
+  override def close(): Unit = if (reader != null) {
+    reader.close()
+    reader = null
+  }
+}
+
+private[graft] object LayoutPartitionReader {
+  /** A Group reader over `file` that uses `conf` as is. */
+  def open(file: String, conf: Configuration): ParquetReader[Group] =
+    new ParquetReader.Builder[Group](
+        HadoopInputFile.fromPath(new Path(file), conf)) {
+      override protected def getReadSupport: ReadSupport[Group] =
+        new GroupReadSupport()
+    }.build()
 }
 
 /** DSv2 APPEND write path — the layout's index-maintenance contract

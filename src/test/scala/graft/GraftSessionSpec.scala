@@ -4,6 +4,10 @@ import java.lang.management.ManagementFactory
 import java.nio.file.Files
 import java.util.concurrent.TimeUnit
 
+import org.apache.logging.log4j.{Level, LogManager}
+import org.apache.logging.log4j.core.{LogEvent, Logger => CoreLogger}
+import org.apache.logging.log4j.core.appender.AbstractAppender
+import org.apache.logging.log4j.core.config.Property
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.{col, lit}
@@ -74,6 +78,43 @@ class GraftSessionSpec extends SparkSuite {
   test("a plain session that generated code before the engine's first touch gets one WARN") {
     val (_, err) = child("spark-first")
     assert(err.split('\n').count(_.contains(warning)) == 1, err.takeRight(4000))
+  }
+
+  /** Messages logged at WARN or above by `logger` while `f` runs. */
+  private def warningsOf(logger: String)(f: => Unit): Seq[String] = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val appender = new AbstractAppender("graft-capture", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel.isMoreSpecificThan(Level.WARN))
+          seen.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val log = LogManager.getLogger(logger).asInstanceOf[CoreLogger]
+    log.addAppender(appender)
+    try f finally {
+      log.removeAppender(appender)
+      appender.stop()
+    }
+    seen.asScala.toSeq
+  }
+
+  test("a repeated Graft.enable keeps the session's SQL functions and logs no " +
+    "replacement WARN") {
+    val registered = Seq("fnv1a", "fnv1a_seeded", "dotd", "simhash64", "byte_sum",
+      "ahash64", "shingle_hash_set", "shingle_hashes", "bounded_min_set",
+      "misra_gries", "gram_matrix", "hilbert2")
+    val warned = warningsOf(
+      "org.apache.spark.sql.catalyst.analysis.SimpleFunctionRegistry") {
+      Graft.enable(spark)
+      Graft.enable(spark)
+    }
+    assert(!warned.exists(_.contains("replaced a previously registered function")),
+      warned.mkString("\n"))
+    registered.foreach(f => assert(spark.catalog.functionExists(f), f))
+    val row = spark.sql("SELECT fnv1a('a') = fnv1a('a'), " +
+      "dotd(array(1d, 2d), array(3d, 4d)) = 11d, hilbert2(1L, 2L, 4) >= 0").head()
+    assert(row.toSeq == Seq(true, true, true), row)
   }
 }
 

@@ -1,8 +1,8 @@
 package graft
 
 import graft.operators.{BandIndex, InvertedIndex, IvfIndex}
-import graft.sources.{LayoutScan, LayoutSource}
-import org.apache.spark.sql.DataFrame
+import graft.sources.{BandsSource, LayoutInputPartition, LayoutScan, LayoutSource}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper}
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
@@ -14,7 +14,9 @@ import org.apache.spark.sql.sources.{EqualTo, Filter, In}
   * partition column (and the key column) narrow the listing on every
   * layout alike. Scans that read the same rows are equal, so Spark
   * reuses an exchange over a layout read within one query — and never
-  * across queries. */
+  * across queries. A scan packs its small files into at most one input
+  * partition per core, reads the same rows as Spark's own parquet
+  * reader, and ships its Hadoop conf as a broadcast. */
 class LayoutScanSpec extends SparkSuite with AdaptiveSparkPlanHelper {
   import spark.implicits._
 
@@ -73,6 +75,154 @@ class LayoutScanSpec extends SparkSuite with AdaptiveSparkPlanHelper {
     new java.io.File(path).listFiles().toSeq
       .filter(d => d.isDirectory && d.getName.startsWith(s"$partCol="))
       .map(_.getName.stripPrefix(s"$partCol=").toLong).sorted
+
+  /** `(file, partition value)` of every parquet file under the layout
+    * root and its `_batch-*` append units, from the local filesystem. */
+  private def layoutFiles(path: String, partCol: String): Seq[(String, Long)] = {
+    def dirs(d: java.io.File, prefix: String) =
+      Option(d.listFiles()).toSeq.flatten
+        .filter(f => f.isDirectory && f.getName.startsWith(prefix))
+        .sortBy(_.getName)
+    val root = new java.io.File(path)
+    for {
+      unit <- root +: dirs(root, "_batch-")
+      part <- dirs(unit, s"$partCol=")
+      f <- part.listFiles().toSeq.sortBy(_.getName)
+      if f.getName.endsWith(".parquet")
+    } yield (f.getPath, part.getName.stripPrefix(s"$partCol=").toLong)
+  }
+
+  /** The test-scope oracle: every layout file read by Spark's own
+    * parquet reader with its directory's partition value, in the
+    * layout read's column order. */
+  private def plainRead(path: String, partCol: String,
+      schema: org.apache.spark.sql.types.StructType): DataFrame = {
+    val payload = org.apache.spark.sql.types.StructType(
+      schema.filter(_.name != partCol))
+    layoutFiles(path, partCol).map { case (f, v) =>
+      spark.read.schema(payload).parquet(f).withColumn(partCol, lit(v))
+        .select(schema.fieldNames.map(col).toIndexedSeq: _*)
+    }.reduce(_ union _)
+  }
+
+  /** A frame's rows as a sorted multiset of printable values. */
+  private def rowsOf(df: DataFrame): Seq[String] =
+    df.collect().toSeq.map(show).sorted
+
+  private def show(r: Row): String = r.toSeq.map {
+    case s: scala.collection.Seq[_] => s.mkString("[", ",", "]")
+    case v => String.valueOf(v)
+  }.mkString("|")
+
+  private def packed(scan: LayoutScan): Seq[Seq[(String, Long)]] =
+    scan.planInputPartitions().toSeq
+      .map(_.asInstanceOf[LayoutInputPartition].files)
+
+  test("a layout with more files than the default parallelism plans at " +
+      "most that many packed partitions; its rows equal a plain parquet " +
+      "read's, with and without a pushed key set") {
+    val par = spark.sparkContext.defaultParallelism
+    Seq(("graft.sources.PostingsSource", postings, "bucket", Some("term")),
+        ("graft.sources.BandsSource", bands, "bucket", Some("band_hash")),
+        ("graft.sources.CellsSource", cells, "cell", None))
+      .foreach { case (format, path, partCol, keyCol) =>
+        val read = spark.read.format(format).option("path", path).load()
+        val all = scanIn(read)
+        val plan = packed(all)
+        assert(all.files.size > par && plan.size <= par,
+          s"$format: ${all.files.size} files in ${plan.size} partitions")
+        assert(plan.flatten.map(_._1) == all.files.map(_._1),
+          s"$format: every listed file once, in listing order")
+        val oracle = plainRead(path, partCol, read.schema)
+        assert(rowsOf(read) == rowsOf(oracle), s"$format: full read")
+        val someParts = partitions(path, partCol).take(3)
+        val byPart = col(partCol).isin(someParts: _*)
+        assert(rowsOf(read.filter(byPart)) == rowsOf(oracle.filter(byPart)),
+          s"$format: pushed partition set")
+        keyCol.foreach { k =>
+          // a packed partition's middle file holds no pushed key: one
+          // present key of every other partition, and for that file's
+          // partition a key it hashes to but the layout does not hold
+          val group = plan.find(_.size >= 3)
+            .getOrElse(fail(s"$format: no partition of 3 files: $plan"))
+          val mid = group(1)._2
+          val present = read.groupBy(col(partCol)).agg(first(col(k)).as("k"))
+            .collect().toSeq.collect { case r if r.getLong(0) != mid => r.get(1) }
+          val absent: Any = k match {
+            case "term" => Iterator.from(0).map(i => s"absent-$i")
+              .find(t => InvertedIndex.bucketOf(t, NB) == mid).get
+            case _ =>
+              val held = read.select(k).as[Long].collect().toSet
+              Iterator.iterate(0L)(_ + 1).find(h =>
+                BandsSource.bucketOf(h, NB) == mid && !held(h)).get
+          }
+          val keys = present :+ absent
+          val keyed = read.filter(col(k).isin(keys: _*))
+          val keyedPlan = packed(scanIn(keyed))
+          assert(keyedPlan.exists(fs => fs.size >= 3 &&
+            fs.slice(1, fs.size - 1).exists(_._2 == mid)),
+            s"$format: no packed partition with a keyless middle file: $keyedPlan")
+          val want = rowsOf(oracle.filter(col(k).isin(keys: _*)))
+          assert(want.size >= present.size)
+          assert(rowsOf(keyed) == want, s"$format: pushed key set")
+        }
+      }
+  }
+
+  test("the micro-batch stream delivers each appended file's rows exactly " +
+      "once across two triggers, in packed partitions") {
+    val p = s"$Dir/bands_stream"
+    val ckpt = s"$Dir/bands_stream_ckpt"
+    fresh(p, ckpt)
+    val (base, more) = (docs.filter($"doc_id" % 2 === 0),
+      docs.filter($"doc_id" % 2 === 1))
+    BandIndex.writeBandLayout(BandIndex.buildBands(base, 0.8, NB), p, 0.8,
+      NB)
+    val schema = spark.read.format("graft.sources.BandsSource")
+      .option("path", p).load().schema
+    val baseFiles = layoutFiles(p, "bucket").size
+    val baseRows = rowsOf(plainRead(p, "bucket", schema))
+    val got = scala.collection.concurrent.TrieMap.empty[Long, (Int, Seq[String])]
+    val q = spark.readStream.format("graft.sources.BandsSource")
+      .option("path", p).load()
+      .writeStream.option("checkpointLocation", ckpt)
+      .foreachBatch { (df: DataFrame, id: java.lang.Long) =>
+        got.put(id.longValue, (df.rdd.getNumPartitions, rowsOf(df)))
+        ()
+      }.start()
+    try {
+      q.processAllAvailable()
+      assert(BandIndex.appendBandsIdempotent(more, p, 0.8, NB, 1L))
+      q.processAllAvailable()
+    } finally q.stop()
+    val batchFiles = layoutFiles(p, "bucket").size - baseFiles
+    val par = spark.sparkContext.defaultParallelism
+    val triggers = got.toSeq.sortBy(_._1).map(_._2).filter(_._2.nonEmpty)
+    assert(triggers.size == 2, got.keys)
+    val Seq((parts0, rows0), (parts1, rows1)) = triggers
+    assert(rows0 == baseRows, "first trigger: the base")
+    assert((rows0 ++ rows1).sorted ==
+      rowsOf(plainRead(p, "bucket", schema)), "second trigger: the append")
+    assert(baseFiles > par && parts0 <= par,
+      s"$baseFiles base files in $parts0 partitions")
+    assert(batchFiles > par && parts1 <= par,
+      s"$batchFiles appended files in $parts1 partitions")
+    fresh(p, ckpt)
+  }
+
+  test("a serialized reader factory is small: the scan broadcasts its " +
+      "Hadoop conf instead of carrying it") {
+    Seq(("graft.sources.PostingsSource", postings),
+        ("graft.sources.BandsSource", bands),
+        ("graft.sources.CellsSource", cells))
+      .foreach { case (format, path) =>
+        val bytes = new java.io.ByteArrayOutputStream()
+        val out = new java.io.ObjectOutputStream(bytes)
+        out.writeObject(scanOf(format, path).createReaderFactory())
+        out.close()
+        assert(bytes.size < 16 * 1024, s"$format: ${bytes.size} bytes")
+      }
+  }
 
   test("a runtime EqualTo on the partition column narrows files on " +
       "every layout, with an Int or a Long value") {

@@ -9,10 +9,13 @@ the `zstd` command-line tool, any other file as plain text), one
 application per file, and prints two tables per application:
 
 * per job group (`spark.jobGroup.id`; `-` for jobs without one): jobs,
-  stages run, tasks and executor CPU seconds;
-* per query: its description, jobs, stages run, and the stages and
-  tasks whose RDD scopes name a `BatchScan graft_*` (the graft layout
-  sources' scan nodes). A query is
+  stages run, tasks, executor CPU seconds and task-deserialization CPU
+  seconds (`deser_cpu_s`, the tasks' Executor Deserialize CPU Time: what
+  a task costs before it runs, so it grows with tasks and with what each
+  task carries);
+* per query: its description, jobs, stages run, the stages and tasks
+  whose RDD scopes name a `BatchScan graft_*` (the graft layout sources'
+  scan nodes), and the query's `deser_cpu_s`. A query is
   a SQL execution; jobs run without one (`queryExecution.toRdd`, as the
   benchmark's reads do) are one query per job group, shown as
   `group <id>`. A layout read that Spark reuses shows once; one that it
@@ -82,6 +85,7 @@ class App:
         self.stages_run = set()  # (stage id, attempt) submitted
         self.stage_tasks = defaultdict(int)
         self.stage_cpu_ns = defaultdict(int)
+        self.stage_deser_ns = defaultdict(int)
         self.exec_desc = {}
 
     def feed(self, ev):
@@ -104,12 +108,14 @@ class App:
             self.stage_tasks[sid] += 1
             metrics = ev.get("Task Metrics") or {}
             self.stage_cpu_ns[sid] += metrics.get("Executor CPU Time", 0)
+            self.stage_deser_ns[sid] += metrics.get(
+                "Executor Deserialize CPU Time", 0)
         elif kind == SQL_START:
             self.exec_desc[str(ev["executionId"])] = ev.get("description", "")
 
     def report(self):
-        groups = defaultdict(lambda: [set(), 0, 0, 0])
-        execs = defaultdict(lambda: [set(), 0, 0, 0])
+        groups = defaultdict(lambda: [set(), 0, 0, 0, 0])
+        execs = defaultdict(lambda: [set(), 0, 0, 0, 0])
         for sid, _ in sorted(self.stages_run):
             job = self.stage_job.get(sid)
             if job is None:
@@ -119,32 +125,34 @@ class App:
             g[1] += 1
             g[2] += self.stage_tasks[sid]
             g[3] += self.stage_cpu_ns[sid]
+            g[4] += self.stage_deser_ns[sid]
             eid = self.job_exec.get(job)
             e = execs[eid if eid is not None
                       else "group " + self.job_group[job]]
             e[0].add(job)
             e[1] += 1
+            e[4] += self.stage_deser_ns[sid]
             if self.stage_scans.get(sid):
                 e[2] += 1
                 e[3] += self.stage_tasks[sid]
         print(f"== {self.name}")
         print(f"{'job group':<40} {'jobs':>6} {'stages':>7} {'tasks':>7} "
-              f"{'cpu_s':>8}")
-        for name, (jobs, stages, tasks, cpu) in sorted(groups.items()):
+              f"{'cpu_s':>8} {'deser_cpu_s':>11}")
+        for name, (jobs, stages, tasks, cpu, deser) in sorted(groups.items()):
             print(f"{name[:40]:<40} {len(jobs):>6} {stages:>7} {tasks:>7} "
-                  f"{cpu / 1e9:>8.2f}")
+                  f"{cpu / 1e9:>8.2f} {deser / 1e9:>11.3f}")
         print()
         print(f"{'query':>5} {'jobs':>5} {'stages':>7} {'scan_stages':>11} "
-              f"{'scan_tasks':>10}  description")
+              f"{'scan_tasks':>10} {'deser_cpu_s':>11}  description")
 
         def order(kv):
             return (0, int(kv[0]), "") if kv[0].isdigit() else (1, 0, kv[0])
-        for eid, (jobs, stages, scans, scan_tasks) in sorted(
+        for eid, (jobs, stages, scans, scan_tasks, deser) in sorted(
                 execs.items(), key=order):
             desc = " ".join(self.exec_desc.get(eid, eid).split())[:60]
             label = eid if eid.isdigit() else "-"
             print(f"{label:>5} {len(jobs):>5} {stages:>7} {scans:>11} "
-                  f"{scan_tasks:>10}  {desc}")
+                  f"{scan_tasks:>10} {deser / 1e9:>11.3f}  {desc}")
         print()
 
 
